@@ -133,7 +133,7 @@ object SketchAggregators {
   /** MinHash signature over pre-exploded shingle-hash rows (used for the
     * audio frame-hash path); elementwise-min merge is the monoid. */
   final class MinHashSigAgg(numPerms: Int) extends Aggregator[Long, Array[Long], Seq[Long]] {
-    @transient private lazy val hasher = new MinHasher(numPerms)
+    @transient private lazy val hasher = MinHasher.shared(numPerms)
     def zero: Array[Long] = Array.fill(numPerms)(Long.MaxValue)
     def reduce(b: Array[Long], shingleHash: Long): Array[Long] = {
       hasher.updateSignature(b, shingleHash)

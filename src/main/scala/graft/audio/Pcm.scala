@@ -1,6 +1,7 @@
 package graft.audio
 
 import graft.sketch.Murmur3x64
+import graft.text.Text
 
 /** Audio handling for the clips table (`bytes BINARY` + typed metadata).
   *
@@ -95,50 +96,79 @@ object Pcm {
   final val HopSize = 128
   final val NBands = 25 // 24 fingerprint bits per frame
 
-  /** Per-frame 16-bit fingerprints over the whole clip. */
-  def fingerprintFrames(samples: Array[Double], srHz: Int): Array[Int] = {
-    if (samples.length < FrameSize) return Array.empty
-    val nFrames = (samples.length - FrameSize) / HopSize + 1
-    val energies = Array.ofDim[Double](nFrames, NBands)
-    // Goertzel at NBands log-spaced frequencies in [200 Hz, 0.45*sr]
-    val freqs = new Array[Double](NBands)
+  /** Goertzel coefficient `2 cos(w)` of each of the NBands log-spaced
+    * frequencies in [200 Hz, 0.45*sr]. */
+  private[graft] def bandCoeffs(srHz: Int): Array[Double] = {
+    val coeffs = new Array[Double](NBands)
     val fLo = 200.0
     val fHi = 0.45 * srHz
     var b = 0
     while (b < NBands) {
-      freqs(b) = fLo * math.pow(fHi / fLo, b.toDouble / (NBands - 1))
+      val freq = fLo * math.pow(fHi / fLo, b.toDouble / (NBands - 1))
+      val w = 2.0 * math.Pi * freq / srHz
+      coeffs(b) = 2.0 * math.cos(w)
       b += 1
     }
-    var f = 0
-    while (f < nFrames) {
-      val off = f * HopSize
-      b = 0
+    coeffs
+  }
+
+  /** Goertzel band energies of the frame at `off` into `energy`, with
+    * `s1`/`s2` as per-band state scratch. Sample-outer, band-inner: the
+    * NBands recurrences advance side by side as independent dependency
+    * chains, instead of NBands serial passes of one chain each. Each band
+    * takes four samples per visit with its state in registers, so the state
+    * arrays are stored once per four steps (FrameSize is a multiple of 4).
+    * Every step keeps the textbook per-band expression and operation order
+    * (no fused multiply-add, no reassociation), so energies are
+    * bit-identical to running one band at a time. */
+  private[graft] def frameEnergies(samples: Array[Double], off: Int, coeffs: Array[Double],
+      s1: Array[Double], s2: Array[Double], energy: Array[Double]): Unit = {
+    java.util.Arrays.fill(s1, 0.0)
+    java.util.Arrays.fill(s2, 0.0)
+    var i = off
+    while (i < off + FrameSize) {
+      val x0 = samples(i); val x1 = samples(i + 1)
+      val x2 = samples(i + 2); val x3 = samples(i + 3)
+      var b = 0
       while (b < NBands) {
-        val w = 2.0 * math.Pi * freqs(b) / srHz
-        val coeff = 2.0 * math.cos(w)
-        var s0 = 0.0; var s1 = 0.0; var s2 = 0.0
-        var i = 0
-        while (i < FrameSize) {
-          s0 = samples(off + i) + coeff * s1 - s2
-          s2 = s1; s1 = s0
-          i += 1
-        }
-        energies(f)(b) = s1 * s1 + s2 * s2 - coeff * s1 * s2
+        val c = coeffs(b)
+        val p2 = s2(b); val p1 = s1(b)
+        val q0 = x0 + c * p1 - p2
+        val q1 = x1 + c * q0 - p1
+        val q2 = x2 + c * q1 - q0
+        s1(b) = x3 + c * q2 - q1
+        s2(b) = q2
         b += 1
       }
-      f += 1
+      i += 4
     }
-    val out = new Array[Int](nFrames)
+    var b = 0
+    while (b < NBands) {
+      energy(b) = s1(b) * s1(b) + s2(b) * s2(b) - coeffs(b) * s1(b) * s2(b)
+      b += 1
+    }
+  }
+
+  /** Per-frame 24-bit fingerprints over the whole clip. */
+  def fingerprintFrames(samples: Array[Double], srHz: Int): Array[Int] = {
+    if (samples.length < FrameSize) return Array.empty
+    val nFrames = (samples.length - FrameSize) / HopSize + 1
+    val coeffs = bandCoeffs(srHz)
+    val s1 = new Array[Double](NBands)
+    val s2 = new Array[Double](NBands)
+    val energy = new Array[Double](NBands)
     val sorted = new Array[Double](NBands)
-    f = 0
+    val out = new Array[Int](nFrames)
+    var f = 0
     while (f < nFrames) {
-      System.arraycopy(energies(f), 0, sorted, 0, NBands)
+      frameEnergies(samples, f * HopSize, coeffs, s1, s2, energy)
+      System.arraycopy(energy, 0, sorted, 0, NBands)
       java.util.Arrays.sort(sorted)
       val median = sorted(NBands / 2)
       var bits = 0
-      b = 0
+      var b = 0
       while (b < NBands - 1) {
-        if (energies(f)(b) > median) bits |= (1 << b)
+        if (energy(b) > median) bits |= (1 << b)
         b += 1
       }
       out(f) = bits
@@ -151,20 +181,15 @@ object Pcm {
     * Coarse position buckets keep alignment sensitivity low. */
   def fingerprintHashes(samples: Array[Double], srHz: Int): Array[Long] = {
     val frames = fingerprintFrames(samples, srHz)
-    val set = new java.util.HashSet[java.lang.Long](frames.length * 2)
+    val hashes = new Array[Long](frames.length)
     var i = 0
     while (i < frames.length) {
       // 4-frame positional bucket: tolerates small offsets, keeps order info
-      set.add(Murmur3x64.mix64(((i / 4).toLong << 32) ^ (frames(i) & 0xffffffffL)))
+      hashes(i) = Murmur3x64.mix64(((i / 4).toLong << 32) ^ (frames(i) & 0xffffffffL))
       i += 1
     }
-    val out = new Array[Long](set.size)
-    val it = set.iterator()
-    var j = 0
-    while (it.hasNext) { out(j) = it.next(); j += 1 }
-    // sorted: enables the merge-walk intersection in the verify stage
-    // (SortedIntersectCountExpr) — sorted once per clip, reused per pair
-    java.util.Arrays.sort(out)
-    out
+    // sorted distinct: enables the merge-walk intersection in the verify
+    // stage (SortedIntersectCountExpr) — sorted once per clip, reused per pair
+    Text.sortedDistinct(hashes)
   }
 }

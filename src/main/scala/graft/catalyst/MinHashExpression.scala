@@ -38,17 +38,9 @@ case class MinHashTextExpr(child: Expression, shingleK: Int, numPerms: Int)
 }
 
 object MinHashTextExpr {
-  private val hashers = new java.util.concurrent.ConcurrentHashMap[Int, MinHasher]()
-
-  private def hasher(numPerms: Int): MinHasher = {
-    val h = hashers.get(numPerms)
-    if (h != null) h
-    else { val nh = new MinHasher(numPerms); hashers.putIfAbsent(numPerms, nh); hashers.get(numPerms) }
-  }
-
   /** Static entry point shared by interpreted eval and generated code. */
   def compute(text: UTF8String, shingleK: Int, numPerms: Int): ArrayData = {
     val shingles = Text.shingleHashesBytes(text.getBytes, shingleK)
-    new GenericArrayData(hasher(numPerms).signature(shingles))
+    new GenericArrayData(MinHasher.shared(numPerms).signature(shingles))
   }
 }

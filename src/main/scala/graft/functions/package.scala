@@ -109,10 +109,10 @@ package object functions {
   /** UDF form of minhash_text (for SQL registration / dynamic args). */
   val minhash_text_udf = udf((text: String, k: Int, numPerms: Int) =>
     if (text == null) Array.emptyLongArray
-    else new MinHasher(numPerms).signature(Text.shingleHashes(text, k)))
+    else MinHasher.shared(numPerms).signature(Text.shingleHashes(text, k)))
 
   val minhash_of_hashes = udf((hashes: Seq[Long], numPerms: Int) =>
-    new MinHasher(numPerms).signature(hashes.toArray))
+    MinHasher.shared(numPerms).signature(hashes.toArray))
 
   // null-tolerant: a null signature (null transcript upstream) yields no
   // bands rather than an NPE in the candidate stage

@@ -153,8 +153,15 @@ object Ann {
       queryPred: org.apache.spark.sql.Column = col("vec_id") < 3,
       trainSampleTarget: Long = 100000L): DataFrame = {
     import spark.implicits._
-    // one job for dim + row count (they fed two separate driver jobs)
-    val hdr = emb.agg(first(size(col("embedding"))), count(lit(1))).head()
+    // one job for dim + row count (they fed two separate driver jobs);
+    // min/max of the size check the input has one dimension
+    val hdr = emb.agg(min(size(col("embedding"))), max(size(col("embedding"))),
+      count(lit(1))).head()
+    val nRows = hdr.getLong(2)
+    require(nRows > 0, "ivfTopK: the embedding input is empty")
+    require(!hdr.isNullAt(0) && hdr.getInt(0) == hdr.getInt(1) && hdr.getInt(0) > 0,
+      "ivfTopK: every embedding must be a non-empty vector of one dimension; " +
+        s"sizes range over [${hdr.get(0)}, ${hdr.get(1)}]")
     val dim = hdr.getInt(0)
     // Lloyd trains on a seeded hash-sample capped near trainSampleTarget
     // rows: at 10^12 rows, `iters` full assignment+aggregation passes buy
@@ -164,7 +171,6 @@ object Ann {
     // corpus stays exactly one pass below. Deterministic: the sample is
     // xxhash64(vec_id) % p == 0, not Bernoulli. At sandbox scale
     // (n <= target) p = 1 and training is bit-identical to full-corpus.
-    val nRows = hdr.getLong(1)
     val p = math.max(1L, nRows / math.max(1L, trainSampleTarget))
     val train =
       if (p > 1)

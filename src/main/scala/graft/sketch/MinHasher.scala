@@ -62,6 +62,14 @@ final class MinHasher(val numPerms: Int, val seed: Long = Murmur3x64.DefaultSeed
 }
 
 object MinHasher {
+  private val sharedByPerms = new java.util.concurrent.ConcurrentHashMap[Int, MinHasher]()
+
+  /** The default-seed hasher for `numPerms`, built once per JVM and shared:
+    * its permutation table is immutable, and per-row callers (UDFs, the
+    * codegen expression) would otherwise rebuild it for every row. */
+  def shared(numPerms: Int): MinHasher =
+    sharedByPerms.computeIfAbsent(numPerms, n => new MinHasher(n))
+
   /** Band hashes: bands x rowsPerBand must tile the signature. Each band's
     * r minima hash to one 64-bit bucket key. Collision in ANY band makes a
     * candidate pair (classic LSH OR-construction). */

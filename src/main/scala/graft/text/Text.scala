@@ -23,22 +23,32 @@ object Text {
   def shingleHashesBytes(bytes: Array[Byte], k: Int): Array[Long] = {
     if (bytes.length <= k) return Array(Murmur3x64.hash64(bytes, Murmur3x64.DefaultSeed))
     val n = bytes.length - k + 1
-    val set = new java.util.HashSet[java.lang.Long](n * 2)
+    val hashes = new Array[Long](n)
     var i = 0
     while (i < n) {
-      set.add(Murmur3x64.hash128(bytes, i, k, Murmur3x64.DefaultSeed)._1)
+      hashes(i) = Murmur3x64.hash128(bytes, i, k, Murmur3x64.DefaultSeed)._1
       i += 1
     }
-    val out = new Array[Long](set.size)
-    val it = set.iterator()
-    var j = 0
-    while (it.hasNext) { out(j) = it.next(); j += 1 }
     // sorted output: downstream set-intersection (verify's hot loop) runs
     // as a zero-allocation merge walk (SortedIntersectCountExpr) instead
     // of a per-row hash set; sorting once per DOC amortizes over every
     // candidate PAIR the doc appears in
-    java.util.Arrays.sort(out)
-    out
+    sortedDistinct(hashes)
+  }
+
+  /** Sorts `hashes` in place and returns its distinct values, ascending —
+    * the set contract of SortedIntersectCountExpr — with a primitive sort
+    * and an in-place dedup (no boxing). Returns `hashes` itself when it
+    * had no duplicates. */
+  def sortedDistinct(hashes: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(hashes)
+    var m = 0
+    var i = 0
+    while (i < hashes.length) {
+      if (m == 0 || hashes(i) != hashes(m - 1)) { hashes(m) = hashes(i); m += 1 }
+      i += 1
+    }
+    if (m == hashes.length) hashes else java.util.Arrays.copyOf(hashes, m)
   }
 
   /** Exact Jaccard over distinct char-k-gram shingles (verification + oracle). */

@@ -171,6 +171,16 @@ class QueriesSpec extends AnyFunSuite {
     assert(recall >= 0.9, s"ann ivf recall too low: $recall")
   }
 
+  test("ann ivf rejects empty input and mixed dimensions with a clear error") {
+    val empty = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
+    val e1 = intercept[IllegalArgumentException](graft.sim.Ann.ivfTopK(spark, empty, kNeighbors = 3))
+    assert(e1.getMessage.contains("empty"), e1.getMessage)
+    val mixed = Seq((0L, Seq(1f, 0f, 0f)), (1L, Seq(0f, 1f, 0f, 0f)), (2L, Seq(0f, 0f, 1f)))
+      .toDF("vec_id", "embedding")
+    val e2 = intercept[IllegalArgumentException](graft.sim.Ann.ivfTopK(spark, mixed, kNeighbors = 3))
+    assert(e2.getMessage.contains("[3, 4]"), e2.getMessage)
+  }
+
   test("ann ivf exhaustive probe (nProbe = nCentroids) equals brute force exactly") {
     val dir = "/root/testdata/sf0.01"
     val brute = SparkEntry.queries("q_ann_bruteforce")(spark, dir)

@@ -1,6 +1,7 @@
 package graft
 
 import graft.audio.Pcm
+import graft.sketch.Murmur3x64
 import graft.text.Text
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -113,12 +114,41 @@ class TextAudioSpec extends AnyFunSuite {
   test("hash-set emitters are sorted; merge-walk count == set intersection") {
     // the verify stage's merge-walk intersection (SortedIntersectCountExpr)
     // requires sorted distinct inputs — pin the contract at the emitters
+    def strictlyIncreasing(a: Array[Long]) = a.indices.drop(1).forall(i => a(i - 1) < a(i))
+    def hashSetSorted(hs: Iterable[Long]): Seq[Long] = {
+      val set = new java.util.HashSet[java.lang.Long]()
+      hs.foreach(h => set.add(h))
+      set.toArray(new Array[java.lang.Long](0)).map(_.longValue).sorted.toSeq
+    }
     val sh = Text.shingleHashes("the quick brown fox jumps over the lazy dog", 5)
-    assert(sh.toSeq == sh.sorted.toSeq, "shingleHashes must emit sorted")
+    assert(strictlyIncreasing(sh), "shingleHashes must emit sorted distinct")
     val sr = 8000
     val s = Array.tabulate(4000)(i => 0.5 * math.sin(2 * math.Pi * 440 * i / sr))
     val fp = Pcm.fingerprintHashes(s, sr)
-    assert(fp.toSeq == fp.sorted.toSeq, "fingerprintHashes must emit sorted")
+    assert(strictlyIncreasing(fp), "fingerprintHashes must emit sorted distinct")
+    // both equal a HashSet-built reference on random inputs; small
+    // alphabets and a steady tone make repeated hashes common
+    val rnd = new scala.util.Random(17)
+    (0 until 100).foreach { t =>
+      val alphabet = 2 + rnd.nextInt(20)
+      val text = Seq.fill(rnd.nextInt(300))(('a' + rnd.nextInt(alphabet)).toChar).mkString
+      val k = 1 + rnd.nextInt(6)
+      val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val ref =
+        if (bytes.length <= k) Seq(Murmur3x64.hash64(bytes, Murmur3x64.DefaultSeed))
+        else hashSetSorted((0 to bytes.length - k).map(i =>
+          Murmur3x64.hash128(bytes, i, k, Murmur3x64.DefaultSeed)._1))
+      val got = Text.shingleHashes(text, k)
+      assert(strictlyIncreasing(got) && got.toSeq == ref, s"shingles differ at case $t")
+      val audio =
+        if (t % 2 == 0) Array.fill(rnd.nextInt(3000))(rnd.nextDouble() * 2 - 1)
+        else Array.tabulate(rnd.nextInt(3000))(i => math.sin(2 * math.Pi * 500 * i / sr))
+      val frames = Pcm.fingerprintFrames(audio, sr)
+      val fpRef = hashSetSorted(frames.indices.map(i =>
+        Murmur3x64.mix64(((i / 4).toLong << 32) ^ (frames(i) & 0xffffffffL))))
+      val fpGot = Pcm.fingerprintHashes(audio, sr)
+      assert(strictlyIncreasing(fpGot) && fpGot.toSeq == fpRef, s"frame hashes differ at case $t")
+    }
     // merge-walk equals set-intersection size on random sorted distinct arrays
     val rng = new scala.util.Random(42)
     (0 until 50).foreach { _ =>
