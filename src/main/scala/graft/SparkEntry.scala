@@ -662,7 +662,8 @@ object SparkEntry {
     // joins + a second distinct, but the verification below recovers the
     // real ids for free from its own payload join — the same sid-keyed
     // shape Dedup.verify uses at scale (three fewer exchanges here).
-    val cands = Dedup.pairsFromBuckets(Dedup.textBuckets(sigs, cfg), cfg.hotBucketLimit)
+    val cands = Dedup.pairsFromBuckets(Dedup.buckets(sigs, cfg, Seq("minhash")),
+        cfg.hotBucketLimit, cfg.saltMaxBucket)
       .select(col("a"), col("b")).distinct()
     // exact verification in the precompute-and-join form: shingle arrays
     // computed ONCE PER DOC (sorted at source), intersection via the

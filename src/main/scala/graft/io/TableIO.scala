@@ -105,6 +105,13 @@ object TableIO {
   val LayoutVersion = "v5" // v5: signature hash arrays sorted (merge-walk
                            // intersection); v4: candidates keyed by 64-bit sids
 
+  /** The resume key of a Dedup run: layout version + config hash + input
+    * fingerprint. A restarted run reuses snapshots only when the snapshot
+    * SCHEMA (LayoutVersion), the shingle/signature config AND the input
+    * table all match. */
+  def snapshotKey(cfg: Product, input: DataFrame): String =
+    s"$LayoutVersion-${configHash(cfg)}-${inputFingerprint(input)}"
+
   /** Stable config hash: pins results to the exact shingle/signature
     * config, like the reference pins lg_k/seed at compile time. */
   def configHash(cfg: Product): String = {

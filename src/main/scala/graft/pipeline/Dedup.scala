@@ -23,8 +23,6 @@ final case class DedupConfig(
     rowsPerBand: Int = 4,
     tau: Double = 0.8,          // exact-Jaccard verify threshold
     containmentTau: Double = 0.9, // substring-containment verify threshold
-    simhashChunks: Int = 4,     // legacy single-chunk scheme (simhash_buckets);
-                                // the pipeline uses 2-of-6 block combos
     simhashMaxHamming: Int = 4, // combo pigeonhole guarantee
     audioBands: Int = 42,
     audioRowsPerBand: Int = 3,  // r=2 produced ~1M birthday-junk pairs at 50k
@@ -60,11 +58,12 @@ final case class DedupConfig(
   * Scale design (the 100TB story, SURVEY §3.4/§4):
   *  - signatures: ONE map pass over clips, no shuffle — minhash, simhash
   *    and the audio fingerprint are computed per row;
-  *  - candidates: explode to (band_id, band_hash) and self-pair within
-  *    buckets. Buckets above `hotBucketLimit` (exact-dup masses, hot
-  *    shingles) switch from O(n^2) all-pairs to O(n) star pairing, which
-  *    preserves connectivity (CC recovers the clique) while bounding
-  *    output — the "skew-aware band-bucket splitting" of the north rule;
+  *  - candidates: explode each row's bucket keys (bucketKeys) and pair
+  *    within buckets (pairsFromBuckets). Buckets above `hotBucketLimit`
+  *    (exact-dup masses, hot shingles) pair within chained chunks, and
+  *    past `saltMaxBucket` switch to O(n) star pairing, which preserves
+  *    connectivity (CC recovers the clique) while bounding output — the
+  *    "skew-aware band-bucket splitting" of the north rule;
   *  - verify: joins candidates back to payloads by id — sort-merge on the
   *    id, the only big join, and it's start-shaped not quadratic;
   *  - CC: see ConnectedComponents (log-round star algorithm).
@@ -153,10 +152,9 @@ object Dedup {
     element_at(array(SourceNames.map(lit): _*), c.cast("int") + 1)
   private[graft] def sidOf(c: Column): Column = xxhash64(c)
 
-  /** The pair run pass of pairsFromBuckets, exposed separately so plan
-    * tests can assert its shape. ONE exchange (repartition on
-    * (source, bucket)), one in-partition sort, one streaming pass —
-    * output (a, b, source) sid pairs, a < b.
+  /** Candidate pairs from a (sid, bucket, source) fan-out. ONE exchange
+    * (repartition on (source, bucket)), one in-partition sort, one
+    * streaming pass — output (a, b, source) sid pairs, a < b.
     *
     * Each (source, bucket) run arrives as one consecutive sorted slice,
     * ordered INSIDE the run by a per-bucket salted hash of the member.
@@ -189,7 +187,7 @@ object Dedup {
     * serializes one linear O(1)-memory scan in a single task — linear,
     * never quadratic, and only in the IDF regime where the evidence is
     * already worthless. */
-  private[graft] def rawRuns(buckets: DataFrame, hotBucketLimit: Int, saltMaxBucket: Int): DataFrame = {
+  def pairsFromBuckets(buckets: DataFrame, hotBucketLimit: Int, saltMaxBucket: Int = 1024): DataFrame = {
     val spark = buckets.sparkSession
     import spark.implicits._
     val hotLimit = hotBucketLimit
@@ -284,73 +282,70 @@ object Dedup {
     }.toDF("a", "b", "source")
   }
 
-  /** Candidate pairs from a (sid, bucket, source) fan-out — one shuffle,
-    * one streaming sorted-run pass (see rawRuns). */
-  def pairsFromBuckets(buckets: DataFrame, hotBucketLimit: Int, saltMaxBucket: Int = 1024): DataFrame =
-    rawRuns(buckets, hotBucketLimit, saltMaxBucket)
+  /** Stage 2 bucket keys: the ONE definition of each evidence source's
+    * key formula, as an array<long> per signature row. Keys are hash-
+    * namespaced per source so they never collide; a band index is
+    * `transform`'s 0-based int position.
+    *  - minhash: text-LSH band collisions (b x r tuned to tau);
+    *  - simhash: 2-of-6 block combos — pigeonhole catches any pair within
+    *    Hamming 4. The earlier 4x16-bit single chunks collided unrelated
+    *    pairs at p = 4*2^-16, and junk is p*n^2/2 (866k pairs at 150k
+    *    clips -> 3.27M at 300k); the combos cut p ~13x and widen recall;
+    *  - audio: audio-minhash band collisions;
+    *  - substring: winnowed fingerprints. If transcript A is a substring
+    *    of B (len >= winnowWindow + winnowK - 1), EVERY winnowed
+    *    fingerprint of A appears in B, so the bucket join cannot miss it;
+    *  - containment: loose r=2 minhash bands for pairs whose Jaccard is
+    *    diluted by length (containment >= 0.9 but J ~ len_short/len_long;
+    *    SURVEY §7.6 risk 1). Off by default, see candidates().
+    * Reads the signature columns minhash / simhash / audio_minhash /
+    * winnow — only the one its source needs. */
+  def bucketKeys(source: String, cfg: DedupConfig): Column = source match {
+    case "minhash" => transform(
+      band_hashes(col("minhash"), lit(cfg.bands), lit(cfg.rowsPerBand)),
+      (h, i) => xxhash64(i, h))
+    case "simhash" => transform(simhash_combo_buckets(col("simhash")),
+      c => xxhash64(lit("simhash"), c))
+    case "audio" => transform(
+      band_hashes(col("audio_minhash"), lit(cfg.audioBands), lit(cfg.audioRowsPerBand)),
+      (h, i) => xxhash64(lit("audio"), i, h))
+    case "substring" => transform(col("winnow"),
+      fp => xxhash64(lit("winnow"), fp))
+    case "containment" => transform(
+      band_hashes(col("minhash"), lit(8), lit(2)),
+      (h, i) => xxhash64(lit("cont"), i, h))
+    case other => throw new IllegalArgumentException(s"unknown candidate source $other")
+  }
 
-  /** Stage 2 bucket builders: each maps the persisted signature table to
-    * compact (sid, bucket, source) rows; all sources share ONE
-    * pair-generation shuffle (pairsFromBuckets) instead of five separate
-    * join pipelines. Bucket keys are hash-namespaced per source so they
-    * never collide. */
+  /** The (sid, bucket, source) fan-out of `sources` over a signature
+    * table with a clip_id column, built in a SINGLE pass: each source's
+    * keys are tagged with its byte code, concatenated and exploded once.
+    * A union of per-source fan-outs would read a signature CHECKPOINT
+    * once PER SOURCE (a checkpointed table cannot be column-pruned, so
+    * every branch deserialized the full wide row — a 128-task scan stage
+    * and 4x the deserialization for the same fan-out rows). All sources
+    * then share ONE pair-generation shuffle (pairsFromBuckets). */
+  def buckets(sigs: DataFrame, cfg: DedupConfig, sources: Seq[String]): DataFrame = {
+    require(sources.nonEmpty, "no candidate sources")
+    def tagged(src: String): Column =
+      transform(bucketKeys(src, cfg), b => struct(b.as("bucket"), sourceLit(src).as("source")))
+    sigs.select(sidOf(col("clip_id")).as("sid"),
+        explode(concat(sources.map(tagged): _*)).as("bs"))
+      .select(col("sid"), col("bs.bucket").as("bucket"), col("bs.source").as("source"))
+  }
 
-  /** 2a: text-LSH buckets from minhash band collisions (tau-tuned). */
-  def textBuckets(sigs: DataFrame, cfg: DedupConfig): DataFrame =
-    sigs.select(
-      sidOf(col("clip_id")).as("sid"),
-      posexplode(band_hashes(col("minhash"), lit(cfg.bands), lit(cfg.rowsPerBand)))
-        .as(Seq("band_id", "band_hash")))
-      .select(col("sid"),
-        xxhash64(col("band_id"), col("band_hash")).as("bucket"),
-        sourceLit("minhash").as("source"))
-
-  /** 2b: SimHash block-combination buckets (2-of-6 blocks; pigeonhole
-    * catches any pair within Hamming distance 4). The earlier 4x16-bit
-    * single-chunk scheme produced junk candidates at p = 4*2^-16 per
-    * unrelated pair — junk is p*n^2/2, which measured QUADRATIC growth
-    * (866k pairs at 150k clips -> 3.27M at 300k) and would swamp verify
-    * at the 10^12 target; the combo keys cut p ~13x AND widen recall. */
-  def simhashBuckets(sigs: DataFrame, cfg: DedupConfig): DataFrame =
-    sigs.select(
-      sidOf(col("clip_id")).as("sid"),
-      explode(simhash_combo_buckets(col("simhash"))).as("chunk"))
-      .select(col("sid"),
-        xxhash64(lit("simhash"), col("chunk")).as("bucket"),
-        sourceLit("simhash").as("source"))
-
-  /** 2c: audio fingerprint buckets from audio-minhash bands. */
-  def audioBuckets(sigs: DataFrame, cfg: DedupConfig): DataFrame =
-    sigs.select(
-      sidOf(col("clip_id")).as("sid"),
-      posexplode(band_hashes(col("audio_minhash"), lit(cfg.audioBands), lit(cfg.audioRowsPerBand)))
-        .as(Seq("band_id", "band_hash")))
-      .select(col("sid"),
-        xxhash64(lit("audio"), col("band_id"), col("band_hash")).as("bucket"),
-        sourceLit("audio").as("source"))
-
-  /** 2d: loose containment buckets — r=2 bands recover recall for pairs
-    * whose Jaccard is diluted by length (shingle containment >= 0.9 but
-    * J ~ len_short/len_long; SURVEY §7.6 risk 1). */
-  def containmentBuckets(sigs: DataFrame, cfg: DedupConfig): DataFrame =
-    sigs.select(
-      sidOf(col("clip_id")).as("sid"),
-      posexplode(band_hashes(col("minhash"), lit(8), lit(2)))
-        .as(Seq("band_id", "band_hash")))
-      .select(col("sid"),
-        xxhash64(lit("cont"), col("band_id"), col("band_hash")).as("bucket"),
-        sourceLit("containment").as("source"))
-
-  /** 2e: exact-substring buckets via winnowing (the distributed suffix-
-    * array pass re-expressed Spark-first). Winnowing guarantee: if
-    * transcript A is a substring of transcript B (len >= winnowWindow +
-    * winnowK - 1), EVERY winnowed fingerprint of A appears in B, so the
-    * bucket join cannot miss the pair. Verification is exact contains(). */
+  /** The substring fan-out alone: `buckets(sigs, cfg, Seq("substring"))`.
+    * Kept as a named entry point only because graft.Bench (a frozen
+    * measuring instrument) calls it. */
   def substringBuckets(sigs: DataFrame, cfg: DedupConfig): DataFrame =
-    sigs.select(sidOf(col("clip_id")).as("sid"), explode(col("winnow")).as("fp"))
-      .select(col("sid"),
-        xxhash64(lit("winnow"), col("fp")).as("bucket"),
-        sourceLit("substring").as("source"))
+    buckets(sigs, cfg, Seq("substring"))
+
+  /** The enabled sources' fan-out, in SourceNames order. */
+  private def enabledBuckets(sigs: DataFrame, cfg: DedupConfig): DataFrame = {
+    val enabled = SourceNames.filter(cfg.sources)
+    require(enabled.nonEmpty, s"no known candidate sources in ${cfg.sources}")
+    buckets(sigs, cfg, enabled)
+  }
 
   /** The north-rule suffix-array pass as a standalone operator: exact
     * shared-span pairs. Winnowed fingerprints bucket the corpus — the
@@ -437,7 +432,7 @@ object Dedup {
     // (hotBucketLimit = MaxValue -> no star-capping anywhere) actually
     // holds — with the default saltMax a >1024-doc fingerprint bucket
     // would silently degrade to star evidence despite the contract.
-    val cands = pairsFromBuckets(substringBuckets(sigs, cfg), hotBucketLimit,
+    val cands = pairsFromBuckets(buckets(sigs, cfg, Seq("substring")), hotBucketLimit,
         math.max(cfg.saltMaxBucket, hotBucketLimit))
       .select(col("a"), col("b")).distinct()
     // sid -> (clip_id, text) decode and payload join in one: the dict is
@@ -465,13 +460,15 @@ object Dedup {
       .as[(String, String, String, String)]
   }
 
-  /** Back-compat single-source candidate helpers (tests / SparkEntry).
+  /** Text-LSH candidates decoded to clip ids: the batch reference the
+    * streaming candidate pass is checked against (StreamingDedupSpec).
     * A pair colliding in k bands would otherwise be emitted k times;
     * distinct() keeps each candidate once. Sid pairs are decoded back to
     * clip ids (and re-canonicalized to string order) via the id
     * dictionary — a pure projection of sigs, no materialization. */
   def textCandidates(sigs: DataFrame, cfg: DedupConfig): DataFrame = {
-    val pairs = pairsFromBuckets(textBuckets(sigs, cfg), cfg.hotBucketLimit)
+    val pairs = pairsFromBuckets(buckets(sigs, cfg, Seq("minhash")),
+        cfg.hotBucketLimit, cfg.saltMaxBucket)
       .distinct()
     val dict = sigs.select(sidOf(col("clip_id")).as("sid"), col("clip_id"))
     val swap = col("id_a") > col("id_b")
@@ -485,50 +482,14 @@ object Dedup {
       .distinct()
   }
 
-  /** The enabled sources' bucket fan-out, one frame (sid, bucket, source).
-    *
-    * Built in a SINGLE pass over the signature table: each source's
-    * bucket keys become an array<struct<bucket,source>> via codegen'd
-    * higher-order `transform`s (bit-identical key formulas to the
-    * per-source builders above — the transform index IS posexplode's
-    * 0-based int pos), concatenated and exploded once. The earlier
-    * union-of-builders shape read the signature CHECKPOINT once PER
-    * SOURCE (a checkpointed table cannot be column-pruned, so every
-    * branch deserialized the full wide row — a 128-task scan stage and
-    * 4x the deserialization for the same fan-out rows). */
-  private def enabledBuckets(sigs: DataFrame, cfg: DedupConfig): DataFrame = {
-    def tagged(arr: Column, src: String): Column =
-      transform(arr, b => struct(b.as("bucket"), sourceLit(src).as("source")))
-    val perSource = Map[String, Column](
-      "minhash" -> tagged(transform(
-        band_hashes(col("minhash"), lit(cfg.bands), lit(cfg.rowsPerBand)),
-        (h, i) => xxhash64(i, h)), "minhash"),
-      "simhash" -> tagged(transform(simhash_combo_buckets(col("simhash")),
-        c => xxhash64(lit("simhash"), c)), "simhash"),
-      "audio" -> tagged(transform(
-        band_hashes(col("audio_minhash"), lit(cfg.audioBands), lit(cfg.audioRowsPerBand)),
-        (h, i) => xxhash64(lit("audio"), i, h)), "audio"),
-      "substring" -> tagged(transform(col("winnow"),
-        fp => xxhash64(lit("winnow"), fp)), "substring"),
-      "containment" -> tagged(transform(
-        band_hashes(col("minhash"), lit(8), lit(2)),
-        (h, i) => xxhash64(lit("cont"), i, h)), "containment"))
-    val enabled = Seq("minhash", "simhash", "audio", "substring", "containment")
-      .filter(cfg.sources)
-    require(enabled.nonEmpty, s"no known candidate sources in ${cfg.sources}")
-    sigs.select(sidOf(col("clip_id")).as("sid"),
-        explode(concat(enabled.map(perSource): _*)).as("bs"))
-      .select(col("sid"), col("bs.bucket").as("bucket"), col("bs.source").as("source"))
-  }
-
   /** Oracle-support dump: every clip's bucket memberships across the
     * enabled evidence sources, decoded to (clip_id, source, bucket).
     * Verify persists this beside clips_input so the DuckDB oracle can
     * replay the candidate stage EXACTLY — below hotBucketLimit the pair
-    * pass emits all within-bucket pairs (rawRuns), so candidates ==
-    * the SQL self-join on (source, bucket). LSH/banding is deterministic
-    * given the signatures; no probabilistic-recall caveat applies to the
-    * replay itself. */
+    * pass emits all within-bucket pairs (pairsFromBuckets), so
+    * candidates == the SQL self-join on (source, bucket). LSH/banding is
+    * deterministic given the signatures; no probabilistic-recall caveat
+    * applies to the replay itself. */
   def bucketDump(sigs: DataFrame, cfg: DedupConfig): DataFrame = {
     val dict = sigs.select(sidOf(col("clip_id")).as("sid"), col("clip_id"))
     enabledBuckets(sigs, cfg).join(dict, "sid")
@@ -536,14 +497,14 @@ object Dedup {
   }
 
   def candidates(sigs: DataFrame, cfg: DedupConfig): DataFrame = {
-    // NOTE: containmentBuckets (b=8, r=2 loose minhash bands) is NOT in
-    // the default union: its junk-collision rate for unrelated docs is
-    // p = 8*J_rand^2, quadratic in corpus size (measured 759k pairs at
+    // NOTE: the "containment" source (b=8, r=2 loose minhash bands) is
+    // NOT in the default sources: its junk-collision rate for unrelated
+    // docs is p = 8*J_rand^2, quadratic in corpus size (measured 759k pairs at
     // 150k clips -> 2.03M at 300k), and every real containment pair it
     // could find is already GUARANTEED a candidate by the winnowing
     // substring pass (any contiguous shared span >= 47 chars). It stays
     // available for corpora with non-contiguous containment.
-    val buckets = enabledBuckets(sigs, cfg)
+    val fanout = enabledBuckets(sigs, cfg)
     // the fan-out has exactly ONE consumer (the single-pass pair stage),
     // so it flows straight into that shuffle — no barrier
     // output keeps the compact 64-bit sid keys (a, b): the verify stage
@@ -554,7 +515,7 @@ object Dedup {
     // collect_set — an 8-byte agg state keeps the partial-agg output
     // rows (the second-largest shuffle of the pipeline) fixed-size, and
     // decodes to the public array<string> contract after the shuffle
-    pairsFromBuckets(buckets, cfg.hotBucketLimit, cfg.saltMaxBucket)
+    pairsFromBuckets(fanout, cfg.hotBucketLimit, cfg.saltMaxBucket)
       .groupBy(col("a"), col("b"))
       .agg(bit_or(expr("shiftleft(1L, cast(source as int))")).as("src_mask"))
       .select(col("a"), col("b"),
@@ -635,88 +596,79 @@ object Dedup {
   /** Stage 4: clusters from verified edges via large-star/small-star CC.
     * cluster_id = min clip_id in the cluster (canonical; SURVEY §5).
     * Unmatched clips keep themselves as singleton clusters. */
-  def clusters(spark: SparkSession, clips: DataFrame, edges: DataFrame): DataFrame = {
-    // verified edges are consumed twice inside CC (vertex dictionary +
-    // edge relabeling): persist so verification runs once. Edge lists are
-    // small (pairs that SURVIVED exact verification) — memory-backed.
-    val e = materialize(edges.select(col("a"), col("b")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    clustersFromEdges(spark, clips, e)
-  }
+  def clusters(spark: SparkSession, clips: DataFrame, edges: DataFrame): DataFrame =
+    clustersFromEdges(spark, clips, edgeBarrier(edges))
 
-  /** clusters() after the edge materialization barrier (split out so the
-    * instrumented run can read the clock at the barrier). */
-  private[graft] def clustersFromEdges(spark: SparkSession, clips: DataFrame, e: DataFrame): DataFrame = {
+  /** Verified edges are consumed twice inside CC (vertex dictionary +
+    * edge relabeling): materialize so verification runs once. Edge lists
+    * are small (pairs that SURVIVED exact verification) — memory-backed. */
+  private def edgeBarrier(edges: DataFrame): DataFrame =
+    materialize(edges.select(col("a"), col("b")),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+
+  private def clustersFromEdges(spark: SparkSession, clips: DataFrame, e: DataFrame): DataFrame = {
     val cc = ConnectedComponents.runOnStrings(spark, e, "a", "b")
     clips.select(col("clip_id"))
       .join(cc, Seq("clip_id"), "left")
       .select(col("clip_id"), coalesce(col("cluster_id"), col("clip_id")).as("cluster_id"))
   }
 
-  /** Whole pipeline, batch mode, no checkpointing (see Checkpointed for
-    * the resumable variant). */
-  def run(spark: SparkSession, clips: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame = {
-    // four candidate stages each consume sigs: persist so the signature
-    // map pass (incl. audio decode + fingerprint) runs once. In the
-    // checkpointed variant this is a table write instead (SURVEY §3.4:
-    // explicit materialization barrier = the --raw/--merge seam).
-    val sigs = materialize(signatures(clips, cfg))
-    val cands = candidates(sigs, cfg)
-    val edges = verify(sigs, cands, cfg)
-    clusters(spark, clips, edges)
-  }
+  /** Whole pipeline, batch mode, no checkpointing (see runCheckpointed
+    * for the resumable variant). */
+  def run(spark: SparkSession, clips: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame =
+    stages(spark, clips, cfg, _ => ())
 
-  /** run().count(), instrumented at the pipeline's EXISTING eager
-    * materialization barriers — identical execution to run(), the hooks
-    * only read the clock where a barrier already synchronizes. Returns
-    * (cluster rows, ordered (stage, seconds)). Stage attribution:
+  /** run().count() with the clock read at the pipeline's EXISTING eager
+    * materialization barriers — the same stage sequence as run(), the
+    * hook only reads the clock where a barrier already synchronizes.
+    * Returns (cluster rows, ordered (stage, seconds)):
     *  - signatures: the map pass (decode + minhash/simhash/winnow/afp);
-    *  - payload: verify()'s pruned-payload repartition + materialize;
     *  - pairs_verify: the bucket fan-out shuffle, single-pass pair run,
-    *    bitmask dedup, both payload joins and exact verification (one
-    *    lazy chain, executes at the edge materialization);
+    *    bitmask dedup, the verify payload (a lazy persist, written on
+    *    first use here), both payload joins and exact verification — one
+    *    lazy chain, executed at the edge materialization;
     *  - cc_clusters: connected components + the final cluster join/count.
     * This is the per-stage scaling diagnosis the bench emits at both
     * parallelism levels (which stage binds the N -> 4N efficiency). */
   def runTimedCount(spark: SparkSession, clips: DataFrame,
       cfg: DedupConfig = DedupConfig()): (Long, Seq[(String, Double)]) = {
-    val stages = Seq.newBuilder[(String, Double)]
+    val times = Seq.newBuilder[(String, Double)]
     var t0 = System.nanoTime()
     def mark(name: String): Unit = {
       val t1 = System.nanoTime()
-      stages += name -> (t1 - t0) / 1e9
+      times += name -> (t1 - t0) / 1e9
       t0 = t1
     }
+    val rows = stages(spark, clips, cfg, mark).count()
+    mark("cc_clusters")
+    (rows, times.result())
+  }
+
+  /** The one stage sequence behind run() and runTimedCount(): `mark` is
+    * called with the stage name right after each eager barrier. */
+  private def stages(spark: SparkSession, clips: DataFrame, cfg: DedupConfig,
+      mark: String => Unit): DataFrame = {
+    // candidates and verify both consume sigs: materialize so the
+    // signature map pass (incl. audio decode + fingerprint) runs once. In
+    // the checkpointed variant this is a table write instead (SURVEY
+    // §3.4: explicit materialization barrier = the --raw/--merge seam).
     val sigs = materialize(signatures(clips, cfg))
     mark("signatures")
-    val cands = candidates(sigs, cfg)
-    val edges = verify(sigs, cands, cfg) // eager payload materialize inside
-    mark("payload")
-    val e = materialize(edges.select(col("a"), col("b")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val edges = edgeBarrier(verify(sigs, candidates(sigs, cfg), cfg))
     mark("pairs_verify")
-    val rows = clustersFromEdges(spark, clips, e).count()
-    mark("cc_clusters")
-    (rows, stages.result())
+    clustersFromEdges(spark, clips, edges)
   }
 
   /** Resumable variant: every stage is committed to a checkpoint table
-    * keyed by the config hash; a restarted run reuses published snapshots
-    * and recomputes only what is missing (north rule: "resumable from
-    * checkpoint with per-partition lineage + metrics"). The table write
-    * is the explicit materialization barrier — the promoted form of the
-    * reference's --raw/--merge seam (SURVEY §1.2). */
+    * keyed by TableIO.snapshotKey; a restarted run reuses published
+    * snapshots and recomputes only what is missing (north rule:
+    * "resumable from checkpoint with per-partition lineage + metrics").
+    * The table write is the explicit materialization barrier — the
+    * promoted form of the reference's --raw/--merge seam (SURVEY §1.2). */
   def runCheckpointed(spark: SparkSession, clips: DataFrame, cfg: DedupConfig,
       checkpointRoot: String): DataFrame = {
     val io = new graft.io.TableIO(spark, checkpointRoot)
-    // key = layout version + config hash + input fingerprint: a restarted
-    // run reuses snapshots only when the snapshot SCHEMA (LayoutVersion —
-    // bumped whenever a stage's column layout changes, so a root written
-    // by an older build recomputes instead of failing on missing columns),
-    // the shingle/signature config AND the input table all match
-    val h = graft.io.TableIO.LayoutVersion + "-" +
-      graft.io.TableIO.configHash(cfg) + "-" +
-      graft.io.TableIO.inputFingerprint(clips)
+    val h = graft.io.TableIO.snapshotKey(cfg, clips)
     val sigs = io.readOrCompute("signatures", h)(signatures(clips, cfg))
     val cands = io.readOrCompute("candidates", h)(candidates(sigs, cfg))
     val edges = io.readOrCompute("edges", h)(verify(sigs, cands, cfg))

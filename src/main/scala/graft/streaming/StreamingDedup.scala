@@ -84,15 +84,12 @@ object StreamingDedup {
     val sigs = clips.select(
       col("clip_id"),
       minhash_text(t, cfg.shingleK, cfg.numPerms).as("minhash"))
-    // same band-bucket keys as Dedup.textBuckets, but carrying the real
-    // clip_id: streaming state pairs ids directly (its output is consumed
-    // without a payload join, so the batch path's compact sid encoding
-    // would force a decode join on an unbounded stream)
-    val buckets = sigs.select(
-        col("clip_id"),
-        posexplode(band_hashes(col("minhash"), lit(cfg.bands), lit(cfg.rowsPerBand)))
-          .as(Seq("band_id", "band_hash")))
-      .select(xxhash64(col("band_id"), col("band_hash")).as("bucket"), col("clip_id"))
+    // the batch minhash bucket keys (Dedup.bucketKeys), but carrying the
+    // real clip_id: streaming state pairs ids directly (its output is
+    // consumed without a payload join, so the batch path's compact sid
+    // encoding would force a decode join on an unbounded stream)
+    val buckets = sigs
+      .select(explode(Dedup.bucketKeys("minhash", cfg)).as("bucket"), col("clip_id"))
       .as[(Long, String)]
     val limit = cfg.hotBucketLimit
     val ttlMs = cfg.streamStateTtlMs

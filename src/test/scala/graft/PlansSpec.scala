@@ -73,10 +73,10 @@ class PlansSpec extends AnyFunSuite {
     val cfg = graft.pipeline.DedupConfig()
     val clips = graft.gen.ClipGen.generate(spark, 100, seed = 3L)._1.toDF()
     val sigs = graft.pipeline.Dedup.signatures(clips, cfg)
-    // assert on the LAZY run pass: pairsFromBuckets materializes it behind
-    // a checkpoint barrier, which truncates the visible lineage
-    val raw = graft.pipeline.Dedup.rawRuns(
-      graft.pipeline.Dedup.textBuckets(sigs, cfg), cfg.hotBucketLimit, cfg.saltMaxBucket)
+    // the pair pass over the minhash fan-out alone: a lazy plan with no
+    // barrier, so the whole lineage down to the scan is visible
+    val raw = graft.pipeline.Dedup.pairsFromBuckets(
+      graft.pipeline.Dedup.buckets(sigs, cfg, Seq("minhash")), cfg.hotBucketLimit, cfg.saltMaxBucket)
     val p = raw.queryExecution.executedPlan.toString
     // the pair-generation fan-out is explicitly pinned (REPARTITION_BY_NUM)
     // so AQE cannot coalesce the quadratic-output aggregation to one task

@@ -41,7 +41,7 @@ class ResumeSpec extends AnyFunSuite {
   test("resume mid-pipeline: later stages recompute, published ones are reused") {
     val clips = ClipGen.generate(spark, nClips = 300, seed = 7L)._1.toDF().cache()
     val root = freshRoot("resume")
-    val h = TableIO.configHash(cfg) + "-" + TableIO.inputFingerprint(clips)
+    val h = TableIO.snapshotKey(cfg, clips)
     val io = new TableIO(spark, root)
     // simulate a run killed after signatures+candidates
     io.commit("signatures", h, Dedup.signatures(clips, cfg))
@@ -54,6 +54,16 @@ class ResumeSpec extends AnyFunSuite {
     assert(resumed == fresh)
     val sigSnapshotAfter = Files.readString(Paths.get(root, "_snapshots", s"signatures-$h.json"))
     assert(sigSnapshotBefore == sigSnapshotAfter, "resume must not rewrite published snapshots")
+    // reuse, not a recompute under another key: one snapshot file and
+    // one lineage commit per reused stage
+    val snaps = Files.list(Paths.get(root, "_snapshots")).iterator().asScala
+      .map(_.getFileName.toString).toSeq
+    Seq("signatures", "candidates").foreach { st =>
+      assert(snaps.count(_.startsWith(s"$st-")) == 1, s"$st recomputed on resume: $snaps")
+    }
+    val sigCommits = new TableIO(spark, root).lineage()
+      .where($"stage" === "signatures").select("snapshot").distinct().count()
+    assert(sigCommits == 1, s"signatures committed $sigCommits times")
   }
 
   test("config change invalidates snapshots (different hash, no stale reuse)") {
