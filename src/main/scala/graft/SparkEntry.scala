@@ -245,12 +245,14 @@ object SparkEntry {
       lshVerifiedDocPairs(s, dir).orderBy(col("a"), col("b"))),
 
     "q_cc_clusters" -> ((s, dir) => {
-      // connected components (large-star/small-star union-find) with a
-      // direct oracle: cluster the EXACT verified J>=0.5 pair set of
-      // q_minhash_lsh_docs; DuckDB replays it as a recursive-CTE
-      // transitive closure. cluster_id = min doc_id in the component;
-      // unmatched docs are singleton clusters. Ids are zero-padded before
-      // CC so its string-min representative is the numeric min.
+      // connected components with a direct oracle: cluster the EXACT
+      // verified J>=0.5 pair set of q_minhash_lsh_docs; DuckDB replays it
+      // as a recursive-CTE transitive closure. cluster_id = min doc_id in
+      // the component; unmatched docs are singleton clusters. At this size
+      // runOnStrings closes the pairs with its driver union-find (its
+      // star rounds take over only past DefaultLocalEdgeThreshold edges).
+      // Ids are zero-padded before CC so its string-min representative is
+      // the numeric min.
       val pairs = lshVerifiedDocPairs(s, dir).select(
         lpad(col("a").cast("string"), 12, "0").as("a"),
         lpad(col("b").cast("string"), 12, "0").as("b"))

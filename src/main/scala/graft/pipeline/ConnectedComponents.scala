@@ -1,9 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Distributed connected components via alternating large-star/small-star
   * (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -23,38 +23,29 @@ import org.apache.spark.storage.StorageLevel
   *    stage restartable, /root/reference/src/main.rs:63-76); without a
   *    dir it falls back to executor-local blocks (test/sandbox mode);
   *  - convergence test is a cheap aggregate (sum of hashes), not collect;
-  *  - HYBRID finisher: a frame at or below `localEdgeThreshold` distinct
-  *    edges (initially, or after any round-pair as the stars collapse) is
-  *    closed by one collect + driver union-find instead of more rounds.
-  *    Each distributed round-pair costs seconds of driver-serial latency
-  *    regardless of rows; at the threshold the collect is ~64 MB. The
-  *    distributed rounds remain the path for big frames and are pinned by
-  *    CcSpec/CcPlanSpec at threshold 0.
+  *  - ONE size decision, in `runOnStrings`: an edge frame of at most
+  *    `DefaultLocalEdgeThreshold` edges is closed by one collect + driver
+  *    union-find, a larger one by `run`'s distributed rounds.
   */
 object ConnectedComponents {
 
-  /** Below this many distinct canonical edges the remaining closure is
-    * latency-bound, not throughput-bound: each distributed round-pair costs
-    * a fixed several seconds of driver-serial scheduling (checkpoint
-    * barrier + AQE replans per exchange) regardless of row count, while a
-    * driver union-find over 2M (long,long) edges is ~64 MB collected and
-    * milliseconds of compute. Verified-duplicate edge frames are SPARSE —
-    * only actual duplicates produce edges — so even very large corpora
-    * often finish here; frames above the threshold run the log-round star
-    * algorithm, and a shrinking frame drops into the local finisher the
-    * moment it crosses the line. */
+  /** Up to this many edges the closure is latency-bound, not
+    * throughput-bound: each distributed round-pair costs a fixed several
+    * seconds of driver-serial scheduling (checkpoint barrier + AQE replans
+    * per exchange) regardless of row count, while a driver union-find over
+    * 2M string-id edges is one collect and milliseconds of compute.
+    * Verified-duplicate edge frames are SPARSE — only actual duplicates
+    * produce edges — so even very large corpora finish here (1.45M edges
+    * at 900k clips). */
   val DefaultLocalEdgeThreshold = 2000000L
 
+  private val MaxIter = 50
+
   /** edges: two columns (src, dst) of any orderable type — long in tests,
-    * struct<long,long> for the 128-bit string-id path — undirected,
-    * self-loops ignored. Returns (node, component) where component = min
-    * node id reachable — canonical cluster id (SURVEY §5).
-    *
-    * localEdgeThreshold: frames at or below this edge count are closed by
-    * a single-collect driver union-find instead of distributed rounds
-    * (0 forces the distributed path — used by the plan/checkpoint specs). */
-  def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 50,
-      localEdgeThreshold: Long = DefaultLocalEdgeThreshold): DataFrame = {
+    * the clip_id strings in the pipeline — undirected, self-loops ignored.
+    * Returns (node, component) where component = min node id reachable —
+    * canonical cluster id (SURVEY §5) — by large-star/small-star rounds. */
+  def run(spark: SparkSession, edges: DataFrame): DataFrame = {
     import spark.implicits._
 
     // canonical undirected edge list, deduped, self-loops dropped
@@ -112,11 +103,7 @@ object ConnectedComponents {
     // a 244-row confirmation pass got SLOWER, 4.1 s vs 1.6 s; AQE's
     // runtime broadcast conversion is worth its replan latency here.)
     var prevSig = signature(e)
-    if (localFinishable(e, prevSig.n, localEdgeThreshold)) {
-      System.err.println(s"[cc] local finish: ${prevSig.n} edges <= $localEdgeThreshold")
-      return localFinish(spark, e)
-    }
-    while (!converged && iter < maxIter) {
+    while (!converged && iter < MaxIter) {
       val tIter = System.nanoTime()
       val next = Dedup.materialize(round(round(e)), StorageLevel.MEMORY_AND_DISK_SER)
       val tMat = System.nanoTime()
@@ -124,18 +111,11 @@ object ConnectedComponents {
       converged = sig == prevSig
       prevSig = sig
       System.err.println(f"[cc] iter $iter: materialize ${(tMat - tIter) / 1e9}%.1f s, probe ${(System.nanoTime() - tMat) / 1e9}%.1f s, rows ${sig.n}")
-      e.unpersist()
+      Dedup.release(e)
       e = next
       iter += 1
-      // star rounds collapse the frame toward (root, member) stars —
-      // once the survivor set fits, one collect beats more latency-bound
-      // round-pairs (connectivity and the vertex set are round-invariant)
-      if (!converged && localFinishable(e, sig.n, localEdgeThreshold)) {
-        System.err.println(s"[cc] local finish after $iter round-pairs: ${sig.n} edges <= $localEdgeThreshold")
-        return localFinish(spark, e)
-      }
     }
-    require(converged, s"connected components did not converge in $maxIter iterations")
+    require(converged, s"connected components did not converge in $MaxIter iterations")
     // driver-serial loop latency is the scaling-efficiency suspect #1:
     // always log how much wall time the iterations cost
     System.err.println(
@@ -148,60 +128,15 @@ object ConnectedComponents {
     out
   }
 
-  /** The local finisher handles the two vertex types the engine produces
-    * (long test ids, struct<long,long> 128-bit hash ids); anything else
-    * stays on the distributed path. */
-  private def localFinishable(e: DataFrame, n: Long, threshold: Long): Boolean =
-    n <= threshold && (e.schema("u").dataType match {
-      case LongType => true
-      case st: StructType =>
-        st.fields.length == 2 && st.fields.forall(_.dataType == LongType)
-      case _ => false
-    })
-
-  /** Single-collect driver union-find over a small (already canonical,
-    * distinct, persisted) edge frame. Output contract and component
-    * labels (min reachable node, Spark's struct ordering = lexicographic
-    * on the two longs) are identical to the distributed path — CcSpec
-    * asserts both paths against the same exact oracle. */
-  private def localFinish(spark: SparkSession, e: DataFrame): DataFrame = {
-    import spark.implicits._
-    val dt = e.schema("u").dataType
-    dt match {
-      case LongType =>
-        val edges = e.collect().map(r => (r.getLong(0), r.getLong(1)))
-        e.unpersist()
-        unionFind(edges).toSeq.toDF("node", "component")
-      case _ =>
-        val edges = e.collect().map { r =>
-          val a = r.getStruct(0); val b = r.getStruct(1)
-          ((a.getLong(0), a.getLong(1)), (b.getLong(0), b.getLong(1)))
-        }
-        e.unpersist()
-        val rows = unionFind(edges).map { case ((n1, n2), (c1, c2)) =>
-          Row(Row(n1, n2), Row(c1, c2))
-        }
-        val schema = StructType(Seq(
-          StructField("node", dt, nullable = false),
-          StructField("component", dt, nullable = false)))
-        // ~50k struct rows (~1 MB serialized) per task: parallelize ships
-        // each partition inside the task closure, and the earlier 500k
-        // chunking drew "task of very large size" warnings at the 2M-edge
-        // threshold (11.8 MiB tasks in the 600k-clip bench)
-        spark.createDataFrame(
-          spark.sparkContext.parallelize(rows.toIndexedSeq,
-            math.max(1, rows.length / 50000)),
-          schema)
-    }
-  }
-
   /** (node, min node in its component) for every distinct endpoint —
-    * path-halving union-find with union-by-min-index, O(E α(V)). */
-  private def unionFind[T](edges: Array[(T, T)])(
-      implicit ord: Ordering[T]): Array[(T, T)] = {
-    val idx = new java.util.HashMap[T, Integer](edges.length * 2)
-    val keys = new scala.collection.mutable.ArrayBuffer[T]
-    def id(k: T): Int = {
+    * path-halving union-find with union-by-min-index, O(E α(V)). "Min" is
+    * Spark's string order, UTF-8 bytes, the order `run`'s `min` uses;
+    * String's own UTF-16 order differs once ids mix code points above
+    * U+FFFF with ones in U+E000..U+FFFF. */
+  private def unionFind(edges: Array[(String, String)]): Array[(String, String)] = {
+    val idx = new java.util.HashMap[String, Integer](edges.length * 2)
+    val keys = new scala.collection.mutable.ArrayBuffer[String]
+    def id(k: String): Int = {
       val got = idx.get(k)
       if (got != null) got.intValue
       else { val i = keys.length; idx.put(k, i); keys += k; i }
@@ -217,15 +152,16 @@ object ConnectedComponents {
       val ra = find(a); val rb = find(b)
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
-    val minOf = new java.util.HashMap[Integer, T]
+    val minOf = new java.util.HashMap[Integer, UTF8String]
     var i = 0
     while (i < keys.length) {
       val r = find(i)
+      val k = UTF8String.fromString(keys(i))
       val cur = minOf.get(r)
-      if (cur == null || ord.lt(keys(i), cur)) minOf.put(r, keys(i))
+      if (cur == null || k.binaryCompare(cur) < 0) minOf.put(r, k)
       i += 1
     }
-    Array.tabulate(keys.length) { k => (keys(k), minOf.get(find(k))) }
+    Array.tabulate(keys.length) { k => (keys(k), minOf.get(find(k)).toString) }
   }
 
   private case class Row2(n: Long, h: Long)
@@ -237,23 +173,17 @@ object ConnectedComponents {
     Row2(r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
   }
 
-  /** Map arbitrary (string) vertex ids to 128-bit hash ids, run CC, map
-    * back. 64-bit ids hit birthday collisions at the 10^12-clip target
-    * (expected collisions ~ n^2/2^65 ~ 10^4 — a guaranteed abort); the
-    * (h1, h2) Murmur3_x64_128 pair pushes that to ~n^2/2^129 ~ 1e-15,
-    * negligible at any feasible scale, with no collision-guard pass and
-    * no abort path. The generic `run` works unchanged because struct
-    * columns are orderable (least/greatest/min) and hashable in Spark. */
+  /** Clusters of a string-id edge frame: (clip_id, cluster_id = min
+    * clip_id in its component) for every endpoint of a non-self-loop edge.
+    * The one size decision: the edges are persisted and counted once; at
+    * most `localEdgeThreshold` of them are collected and closed by a
+    * driver union-find, more run `run`'s distributed rounds directly on
+    * the string ids. Both give the same labels (CcSpec runs both). The
+    * threshold is a parameter only so tests can force the distributed
+    * branch with 0. */
   def runOnStrings(spark: SparkSession, edges: DataFrame, aCol: String, bCol: String,
       localEdgeThreshold: Long = DefaultLocalEdgeThreshold): DataFrame = {
     import spark.implicits._
-    // persist + count once: the cache makes the count pass free for the
-    // big path too (verts + edge relabeling consumed this frame twice
-    // already), and a small frame short-circuits the ENTIRE hash-id plane —
-    // no verts checkpoint, no 4 relabeling/representative joins, and the
-    // component representative (min ORIGINAL string id) falls directly out
-    // of the union-find. Cluster labels are identical to the distributed
-    // path by construction (CcSpec pins both).
     val cached = edges.select(col(aCol), col(bCol))
       .persist(StorageLevel.MEMORY_AND_DISK_SER)
     val nEdges = cached.count()
@@ -263,33 +193,13 @@ object ConnectedComponents {
         .filter { case (a, b) => a != b } // self-loops: same drop as run()
       cached.unpersist(blocking = false)
       System.err.println(s"[cc] local finish (string ids): $nEdges edges <= $localEdgeThreshold")
-      return unionFind(pairs).toSeq.toDF("clip_id", "cluster_id")
+      unionFind(pairs).toSeq.toDF("clip_id", "cluster_id")
+    } else {
+      val cc = run(spark, cached)
+      // run() eagerly materialized its canonical edge frame, so the cache
+      // is out of the returned lineage
+      cached.unpersist(blocking = false)
+      cc.select($"node".as("clip_id"), $"component".as("cluster_id"))
     }
-    val hash128 = udf { (s: String) =>
-      graft.sketch.Murmur3x64.hash128(
-        s.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        graft.sketch.Murmur3x64.DefaultSeed)
-    }
-    // materialized once: reused for both edge joins and the final id
-    // mapping — and it cuts the upstream (possibly very expensive)
-    // edge-producing plan out of the returned lineage
-    val verts = Dedup.materialize(cached.select(col(aCol).as("id"))
-      .union(cached.select(col(bCol).as("id")))
-      .distinct()
-      .withColumn("nid", hash128($"id")), StorageLevel.MEMORY_AND_DISK_SER)
-    val eN = cached
-      .join(verts.select($"id".as(aCol), $"nid".as("u")), aCol)
-      .join(verts.select($"id".as(bCol), $"nid".as("v")), bCol)
-      .select($"u", $"v")
-    val cc = run(spark, eN, localEdgeThreshold = localEdgeThreshold)
-    // run() eagerly materialized eN's canonical frame, so the edge cache
-    // is out of every remaining lineage (cc is built on converged state,
-    // the joins below on verts)
-    cached.unpersist(blocking = false)
-    // component representative = min ORIGINAL id in the component (stable,
-    // partition-invariant cluster ids; SURVEY §5)
-    val withIds = cc.join(verts.select($"nid".as("node"), $"id"), "node")
-    val reps = withIds.groupBy($"component").agg(min($"id").as("cluster_id"))
-    withIds.join(reps, "component").select($"id".as("clip_id"), $"cluster_id")
   }
 }

@@ -66,7 +66,9 @@ final case class DedupConfig(
   *    "skew-aware band-bucket splitting" of the north rule;
   *  - verify: joins candidates back to payloads by id — sort-merge on the
   *    id, the only big join, and it's start-shaped not quadratic;
-  *  - CC: see ConnectedComponents (log-round star algorithm).
+  *  - CC: see ConnectedComponents (a driver union-find up to
+  *    DefaultLocalEdgeThreshold edges, large-star/small-star rounds past
+  *    it, both on the clip_id strings).
   */
 object Dedup {
 
@@ -119,14 +121,23 @@ object Dedup {
       cached.unpersist(blocking = false)
       out
     } else
-      // DISK_ONLY by default: the signature + payload checkpoints are
-      // ~10 GB serialized at 600k clips, and keeping them heap-resident
+      // DISK_ONLY by default: the signature checkpoint is
+      // ~10 GB serialized at 600k clips, and keeping it heap-resident
       // (MEMORY_AND_DISK_SER) drove ParallelGC into multi-second full
       // collections that inflated the high-core leg superlinearly; local
       // SSD blocks cost a re-read but zero GC. Small frames (CC rounds,
       // verified edges) pass MEMORY_AND_DISK_SER instead — a disk round
       // trip per CC iteration is pure serial latency for kilobyte state.
       df.localCheckpoint(true, localLevel)
+
+  /** Frees the blocks behind a `materialize`d frame once nothing left to
+    * run reads it. `Dataset.unpersist` cannot: it only reaches the cache
+    * manager, while a local checkpoint persists its RDD directly. A
+    * reliable checkpoint holds no blocks, so this is a no-op there. */
+  private[graft] def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ =>
+  }
 
   /** Evidence sources are byte-coded and clip ids 64-bit-hashed inside
     * the candidate stage: the bucket fan-out is the single largest
@@ -141,8 +152,8 @@ object Dedup {
     * killed by exact verification, and a lost true pair needs both ids
     * in one bucket AND equal hashes — expected lost pairs ~ n^2/2^65
     * (~3e4 of ~10^12 at the target scale, recall impact < 1e-7, far
-    * inside the 0.99 budget). Cluster VERTEX ids stay 128-bit
-    * (ConnectedComponents) where a collision would merge clusters. */
+    * inside the 0.99 budget). Connected components run on the clip_id
+    * strings themselves, so no collision can merge two clusters. */
   private[graft] val SourceNames: Seq[String] =
     Seq("minhash", "simhash", "audio", "substring", "containment")
   private[graft] def sourceCode(name: String): Int = SourceNames.indexOf(name)
@@ -533,7 +544,7 @@ object Dedup {
     // the signature pass (never once per candidate pair — measured
     // 2.7ms/pair in per-pair UDF form; the array_intersect form is
     // codegen'd and ~50x cheaper) and arrive here as sig columns. The
-    // pruned projection is re-materialized so the two id joins below read
+    // pruned projection is shuffled once so the two id joins below read
     // compact (id, transcript, sh, afp) rows instead of full sig rows
     // (a checkpointed table cannot be column-pruned).
     // pre-partitioned by clip_id: the aliased projections below keep the
@@ -547,16 +558,11 @@ object Dedup {
     val payload = sigs.select(sidOf(col("clip_id")).as("sid"), col("clip_id"),
         col("transcript"), col("sh"), col("afp"))
       .repartition(shufN, col("sid"))
-    // persist, not a second reliable checkpoint: the payload is a pure
-    // projection of the ALREADY-checkpointed signature table, so its
-    // lineage is shallow and recompute-on-loss is bounded — a checkpoint
-    // here wrote the transcript/sh/afp bytes to the checkpoint store a
-    // second time per run for no added fault-tolerance. DISK_ONLY for the
-    // same GC reason as the sigs barrier (10 GB serialized at 600k clips).
-    val payloadM = payload.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val withA = cands.join(payloadM.select(col("sid").as("a"), col("clip_id").as("id_a"),
+    // no persist: both joins read one payload exchange, which AQE runs
+    // once and reuses (ReusedExchange, PlansSpec)
+    val withA = cands.join(payload.select(col("sid").as("a"), col("clip_id").as("id_a"),
       col("transcript").as("text_a"), col("sh").as("sh_a"), col("afp").as("afp_a")), "a")
-    val withB = withA.join(payloadM.select(col("sid").as("b"), col("clip_id").as("id_b"),
+    val withB = withA.join(payload.select(col("sid").as("b"), col("clip_id").as("id_b"),
       col("transcript").as("text_b"), col("sh").as("sh_b"), col("afp").as("afp_b")), "b")
     val inter = sorted_intersect_count(col("sh_a"), col("sh_b")).cast("double")
     // try_divide: ANSI-safe even if an upstream source hands us genuinely
@@ -593,21 +599,12 @@ object Dedup {
         col("containment"), col("audio_jaccard"), col("is_sub"))
   }
 
-  /** Stage 4: clusters from verified edges via large-star/small-star CC.
+  /** Stage 4: clusters from verified edges (ConnectedComponents.runOnStrings,
+    * which persists and counts them once).
     * cluster_id = min clip_id in the cluster (canonical; SURVEY §5).
     * Unmatched clips keep themselves as singleton clusters. */
-  def clusters(spark: SparkSession, clips: DataFrame, edges: DataFrame): DataFrame =
-    clustersFromEdges(spark, clips, edgeBarrier(edges))
-
-  /** Verified edges are consumed twice inside CC (vertex dictionary +
-    * edge relabeling): materialize so verification runs once. Edge lists
-    * are small (pairs that SURVIVED exact verification) — memory-backed. */
-  private def edgeBarrier(edges: DataFrame): DataFrame =
-    materialize(edges.select(col("a"), col("b")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-
-  private def clustersFromEdges(spark: SparkSession, clips: DataFrame, e: DataFrame): DataFrame = {
-    val cc = ConnectedComponents.runOnStrings(spark, e, "a", "b")
+  def clusters(spark: SparkSession, clips: DataFrame, edges: DataFrame): DataFrame = {
+    val cc = ConnectedComponents.runOnStrings(spark, edges, "a", "b")
     clips.select(col("clip_id"))
       .join(cc, Seq("clip_id"), "left")
       .select(col("clip_id"), coalesce(col("cluster_id"), col("clip_id")).as("cluster_id"))
@@ -624,9 +621,9 @@ object Dedup {
     * Returns (cluster rows, ordered (stage, seconds)):
     *  - signatures: the map pass (decode + minhash/simhash/winnow/afp);
     *  - pairs_verify: the bucket fan-out shuffle, single-pass pair run,
-    *    bitmask dedup, the verify payload (a lazy persist, written on
-    *    first use here), both payload joins and exact verification — one
-    *    lazy chain, executed at the edge materialization;
+    *    bitmask dedup, the verify payload shuffle, both payload joins
+    *    and exact verification — one lazy chain, executed at the edge
+    *    materialization;
     *  - cc_clusters: connected components + the final cluster join/count.
     * This is the per-stage scaling diagnosis the bench emits at both
     * parallelism levels (which stage binds the N -> 4N efficiency). */
@@ -654,9 +651,16 @@ object Dedup {
     // §3.4: explicit materialization barrier = the --raw/--merge seam).
     val sigs = materialize(signatures(clips, cfg))
     mark("signatures")
-    val edges = edgeBarrier(verify(sigs, candidates(sigs, cfg), cfg))
+    // the edge barrier is where verification runs and pairs_verify ends;
+    // edge lists are small (pairs that SURVIVED exact verification)
+    val edges = materialize(verify(sigs, candidates(sigs, cfg), cfg).select(col("a"), col("b")),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     mark("pairs_verify")
-    clustersFromEdges(spark, clips, edges)
+    val out = clusters(spark, clips, edges)
+    // CC is eager and its output reads neither barrier
+    release(sigs)
+    release(edges)
+    out
   }
 
   /** Resumable variant: every stage is committed to a checkpoint table

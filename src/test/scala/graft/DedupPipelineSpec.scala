@@ -189,6 +189,30 @@ class DedupPipelineSpec extends AnyFunSuite {
       s"diff=${(got.toSet -- want.toSet).take(5)} / ${(want.toSet -- got.toSet).take(5)}")
   }
 
+  test("Dedup.run releases the blocks it persists (no checkpoint dir)") {
+    // local checkpoints persist their RDD directly, out of reach of
+    // Dataset.unpersist, so the run must release its signature and edge
+    // barriers itself. Compared by RDD id, since the context tracks
+    // persisted RDDs through weak references.
+    val sc = spark.sparkContext
+    val bridge = org.apache.spark.graft.CheckpointDirBridge
+    val dir = bridge.get(sc)
+    bridge.set(sc, None)
+    val small = ClipGen.generate(spark, nClips = 300, seed = 7L, numPartitions = 4)._1.toDF().cache()
+    try {
+      val n = small.count()
+      val before = sc.getPersistentRDDs.keySet
+      for (i <- 1 to 2) {
+        assert(Dedup.run(spark, small, cfg).count() == n)
+        val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+        assert(left.isEmpty, s"run $i left persisted: ${left.values.mkString("; ")}")
+      }
+    } finally {
+      small.unpersist()
+      bridge.set(sc, dir)
+    }
+  }
+
   test("clusters are partition-invariant (1 vs 7 partitions)") {
     val c1 = Dedup.run(spark, clips.repartition(1), cfg)
       .as[(String, String)].collect().toMap

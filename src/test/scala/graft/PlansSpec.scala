@@ -85,4 +85,17 @@ class PlansSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"), "all-pairs join found in candidate plan")
     assert(!p.contains("BroadcastNestedLoopJoin"), "unkeyed join found in candidate plan")
   }
+
+  test("verify shuffles the payload once for both id joins, with no persist") {
+    val cfg = graft.pipeline.DedupConfig()
+    val clips = graft.gen.ClipGen.generate(spark, 100, seed = 3L)._1.toDF()
+    val sigs = graft.pipeline.Dedup.materialize(graft.pipeline.Dedup.signatures(clips, cfg))
+    try {
+      val v = graft.pipeline.Dedup.verify(sigs, graft.pipeline.Dedup.candidates(sigs, cfg), cfg)
+      v.collect() // final adaptive plan: query stages and their reuse are decided here
+      val p = v.queryExecution.executedPlan.toString
+      assert(p.contains("ReusedExchange"), s"payload exchange not reused by the second join:\n$p")
+      assert(!p.contains("InMemoryTableScan"), s"verify reads a persisted frame:\n$p")
+    } finally graft.pipeline.Dedup.release(sigs)
+  }
 }
