@@ -2,7 +2,6 @@ package graft
 
 import graft.agg.SketchAggregators._
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.udaf
 
 /** SQL-surface registration: exposes the sketch aggregates and scalar
   * helpers under stable names so `spark.sql("SELECT kmv_est(x) ...")`
@@ -13,14 +12,14 @@ object GraftFunctions {
   def registerAll(spark: SparkSession): Unit = {
     val r = spark.udf
     // aggregates (partial/final = --raw/--merge)
-    r.register("kmv_sketch", udaf(new DistinctSketchAgg(65536)))
-    r.register("kmv_est", udaf(new DistinctEstAgg(65536)))
-    r.register("kmv_est_long", udaf(new DistinctEstLongAgg(65536)))
-    r.register("kmv_merge_est", udaf(new MergeEstAgg))
-    r.register("kmv_merge", udaf(new MergeSketchAgg))
-    r.register("freq_items3", udaf(new FreqItemsAgg(3)))
-    r.register("freq_items20_exact", udaf(new FreqItemsLgAgg(20, 18)))
-    r.register("minhash_sig_agg", udaf(new MinHashSigAgg(128)))
+    r.register("kmv_sketch", kmvSketch(65536).udf)
+    r.register("kmv_est", kmvEst(65536).udf)
+    r.register("kmv_est_long", kmvEstLong(65536).udf)
+    r.register("kmv_merge_est", kmvMergeEst.udf)
+    r.register("kmv_merge", kmvMerge.udf)
+    r.register("freq_items3", freqItems(3).udf)
+    r.register("freq_items20_exact", freqItemsLg(20, 18).udf)
+    r.register("minhash_sig_agg", minHashSig(128).udf)
     // scalars
     r.register("theta_union_est", functions.theta_union_est)
     r.register("theta_intersect_est", functions.theta_intersect_est)

@@ -2,9 +2,13 @@ package graft.agg
 
 import graft.sketch.{DistinctSketch, FreqSketch, MinHasher}
 import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
+import org.apache.spark.sql.functions.udaf
+import scala.reflect.ClassTag
 
-/** Spark `Aggregator`s for the sketch family.
+/** Spark aggregates for the sketch family, one definition per aggregate;
+  * `graft.functions` and `GraftFunctions.registerAll` both build from them.
   *
   * This is the central mapping of the project (SURVEY §2.9): the
   * reference's LineReducer update / --raw partial emission / --merge final
@@ -12,140 +16,116 @@ import org.apache.spark.sql.expressions.Aggregator
   * src/main.rs:63-76,115-127) IS Spark's partial/final aggregation
   * contract. Catalyst plans every one of these as
   * HashAggregate(partial) -> Exchange -> HashAggregate(final): the
-  * reference's Unix-pipe process boundary becomes the shuffle boundary,
-  * and only O(k) sketch bytes cross it — never rows.
+  * reference's Unix-pipe process boundary becomes the shuffle boundary.
+  *
+  * What crosses it is one Kryo-encoded buffer per group and partition,
+  * never rows:
+  *  - KMV (`DistinctSketch`): its canonical compact sketch, 17 + 8·min(n,
+  *    nomK) bytes plus Kryo's class name, not its hash table;
+  *  - KMV merge (`DistinctSketch.Compact`): the compact's fields;
+  *  - heavy hitters (`FreqSketch`): its item -> count map, at most
+  *    0.75·2^lgMaxK entries;
+  *  - MinHash: the numPerms-long signature.
   */
 object SketchAggregators {
 
-  private def kryo[T](implicit ct: scala.reflect.ClassTag[T]): Encoder[T] = Encoders.kryo[T]
-
-  /** approx/exact COUNT DISTINCT of strings -> serialized sketch bytes
-    * (the --raw analog: a persistable, mergeable partial). */
-  final class DistinctSketchAgg(nomK: Int) extends Aggregator[String, DistinctSketch, Array[Byte]] {
-    def zero: DistinctSketch = new DistinctSketch(nomK)
-    def reduce(b: DistinctSketch, a: String): DistinctSketch = { if (a != null) b.update(a); b }
-    def merge(x: DistinctSketch, y: DistinctSketch): DistinctSketch = { x.mergeCompact(y.compact()); x }
-    def finish(b: DistinctSketch): Array[Byte] = b.compact().serialize()
-    def bufferEncoder: Encoder[DistinctSketch] = kryo[DistinctSketch]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+  /** The one aggregate shape: zero / update / merge / finish over a
+    * Kryo-encoded buffer, applied to columns read with `in`. */
+  final class SketchAgg[I, B: ClassTag, O](
+      in: Encoder[I], init: () => B, update: (B, I) => B, combine: (B, B) => B,
+      done: B => O, out: Encoder[O]) extends Aggregator[I, B, O] {
+    def zero: B = init()
+    def reduce(b: B, a: I): B = update(b, a)
+    def merge(x: B, y: B): B = combine(x, y)
+    def finish(b: B): O = done(b)
+    def bufferEncoder: Encoder[B] = Encoders.kryo[B]
+    def outputEncoder: Encoder[O] = out
+    def udf: UserDefinedFunction = udaf(this, in)
   }
+
+  private def kmv[I, O](nomK: Int, in: Encoder[I], add: (DistinctSketch, I) => Unit,
+      done: DistinctSketch => O, out: Encoder[O]) =
+    new SketchAgg[I, DistinctSketch, O](in, () => new DistinctSketch(nomK),
+      (b, a) => { if (a != null) add(b, a); b },
+      (x, y) => { x.mergeCompact(y.compact()); x }, done, out)
+
+  /** COUNT DISTINCT of strings -> serialized sketch bytes (the --raw
+    * analog: a persistable, mergeable partial). */
+  def kmvSketch(nomK: Int) =
+    kmv[String, Array[Byte]](nomK, Encoders.STRING, _.update(_), _.compact().serialize(), Encoders.BINARY)
 
   /** COUNT DISTINCT estimate of strings (exact while < nomK distinct). */
-  final class DistinctEstAgg(nomK: Int) extends Aggregator[String, DistinctSketch, Double] {
-    def zero: DistinctSketch = new DistinctSketch(nomK)
-    def reduce(b: DistinctSketch, a: String): DistinctSketch = { if (a != null) b.update(a); b }
-    def merge(x: DistinctSketch, y: DistinctSketch): DistinctSketch = { x.mergeCompact(y.compact()); x }
-    def finish(b: DistinctSketch): Double = b.estimate
-    def bufferEncoder: Encoder[DistinctSketch] = kryo[DistinctSketch]
-    def outputEncoder: Encoder[Double] = Encoders.scalaDouble
-  }
+  def kmvEst(nomK: Int) =
+    kmv[String, Double](nomK, Encoders.STRING, _.update(_), _.estimate, Encoders.scalaDouble)
 
-  /** COUNT DISTINCT estimate of longs (little-endian pinned, SURVEY P4). */
-  final class DistinctEstLongAgg(nomK: Int) extends Aggregator[Long, DistinctSketch, Double] {
-    def zero: DistinctSketch = new DistinctSketch(nomK)
-    def reduce(b: DistinctSketch, a: Long): DistinctSketch = { b.updateLong(a); b }
-    def merge(x: DistinctSketch, y: DistinctSketch): DistinctSketch = { x.mergeCompact(y.compact()); x }
-    def finish(b: DistinctSketch): Double = b.estimate
-    def bufferEncoder: Encoder[DistinctSketch] = kryo[DistinctSketch]
-    def outputEncoder: Encoder[Double] = Encoders.scalaDouble
-  }
+  /** COUNT DISTINCT estimate of longs (little-endian pinned, SURVEY P4).
+    * Read boxed, so a null is skipped rather than counted as 0. */
+  def kmvEstLong(nomK: Int) =
+    kmv[java.lang.Long, Double](nomK, Encoders.LONG, _.updateLong(_), _.estimate, Encoders.scalaDouble)
+
+  // Merges start from an empty nomK-4096 compact, so the merged nomK is
+  // min(4096, inputs') and kmv_merge's bytes carry it.
+  private def kmvUnion[O](done: DistinctSketch.Compact => O, out: Encoder[O]) =
+    new SketchAgg[Array[Byte], DistinctSketch.Compact, O](Encoders.BINARY,
+      () => DistinctSketch.emptyCompact(1 << DistinctSketch.DefaultLgK),
+      (b, a) => if (a == null) b else DistinctSketch.union(Seq(b, DistinctSketch.deserialize(a))),
+      (x, y) => DistinctSketch.union(Seq(x, y)), done, out)
 
   /** Merge serialized sketches -> estimate (the --merge analog,
     * /root/reference/src/main.rs:103-127). */
-  final class MergeEstAgg extends Aggregator[Array[Byte], DistinctSketch.Compact, Double] {
-    def zero: DistinctSketch.Compact = DistinctSketch.emptyCompact(1 << DistinctSketch.DefaultLgK)
-    def reduce(b: DistinctSketch.Compact, a: Array[Byte]): DistinctSketch.Compact =
-      if (a == null) b else DistinctSketch.union(Seq(b, DistinctSketch.deserialize(a)))
-    def merge(x: DistinctSketch.Compact, y: DistinctSketch.Compact): DistinctSketch.Compact =
-      DistinctSketch.union(Seq(x, y))
-    def finish(b: DistinctSketch.Compact): Double = b.estimate
-    def bufferEncoder: Encoder[DistinctSketch.Compact] = kryo[DistinctSketch.Compact]
-    def outputEncoder: Encoder[Double] = Encoders.scalaDouble
-  }
+  def kmvMergeEst = kmvUnion[Double](_.estimate, Encoders.scalaDouble)
 
   /** Merge serialized sketches -> serialized union sketch (combiner tree
     * inner node; reference cases 4-7, src/main.rs:30-45). */
-  final class MergeSketchAgg extends Aggregator[Array[Byte], DistinctSketch.Compact, Array[Byte]] {
-    def zero: DistinctSketch.Compact = DistinctSketch.emptyCompact(1 << DistinctSketch.DefaultLgK)
-    def reduce(b: DistinctSketch.Compact, a: Array[Byte]): DistinctSketch.Compact =
-      if (a == null) b else DistinctSketch.union(Seq(b, DistinctSketch.deserialize(a)))
-    def merge(x: DistinctSketch.Compact, y: DistinctSketch.Compact): DistinctSketch.Compact =
-      DistinctSketch.union(Seq(x, y))
-    def finish(b: DistinctSketch.Compact): Array[Byte] = b.serialize()
-    def bufferEncoder: Encoder[DistinctSketch.Compact] = kryo[DistinctSketch.Compact]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
+  def kmvMerge = kmvUnion[Array[Byte]](_.serialize(), Encoders.BINARY)
 
   final case class FreqRow(item: String, est: Long, lb: Long, ub: Long)
 
+  private def freq[I](lgMaxK: Int, in: Encoder[I], add: (FreqSketch, I) => Unit,
+      rows: FreqSketch => Seq[(String, Long, Long, Long)]) =
+    new SketchAgg[I, FreqSketch, Seq[FreqRow]](in, () => new FreqSketch(lgMaxK),
+      (b, a) => { add(b, a); b }, (x, y) => { x.merge(y); x },
+      b => rows(b).map { case (item, est, lb, ub) => FreqRow(item, est, lb, ub) },
+      ExpressionEncoder[Seq[FreqRow]]())
+
+  private val addItem: (FreqSketch, String) => Unit = (b, a) => if (a != null) b.update(a)
+
   /** Heavy hitters: top-k frequent items with [lb, ub] bounds
     * (reference --hh, SURVEY A9-A11). Exact while under capacity. */
-  final class FreqItemsAgg(k: Int) extends Aggregator[String, FreqSketch, Seq[FreqRow]] {
-    def zero: FreqSketch = FreqSketch.forTopK(k)
-    def reduce(b: FreqSketch, a: String): FreqSketch = { if (a != null) b.update(a); b }
-    def merge(x: FreqSketch, y: FreqSketch): FreqSketch = { x.merge(y); x }
-    def finish(b: FreqSketch): Seq[FreqRow] =
-      b.topK(k).map { case (item, est, lb, ub) => FreqRow(item, est, lb, ub) }
-    def bufferEncoder: Encoder[FreqSketch] = kryo[FreqSketch]
-    def outputEncoder: Encoder[Seq[FreqRow]] = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-  }
+  def freqItems(k: Int) = freq[String](FreqSketch.lgSizeForTopK(k), Encoders.STRING, addItem, _.topK(k))
 
   /** Weighted heavy hitters: update(item, weight) — the reference's
     * `HhSketch::update(bytes, weight)` surface
     * (/root/reference/src/wrapper/hh.rs:127-151). Non-positive weights
     * are ignored (the sketch contract requires weight >= 0). */
-  final class FreqItemsWeightedAgg(k: Int) extends Aggregator[(String, Long), FreqSketch, Seq[FreqRow]] {
-    def zero: FreqSketch = FreqSketch.forTopK(k)
-    def reduce(b: FreqSketch, a: (String, Long)): FreqSketch = {
-      if (a._1 != null && a._2 > 0) b.update(a._1, a._2); b
-    }
-    def merge(x: FreqSketch, y: FreqSketch): FreqSketch = { x.merge(y); x }
-    def finish(b: FreqSketch): Seq[FreqRow] =
-      b.topK(k).map { case (item, est, lb, ub) => FreqRow(item, est, lb, ub) }
-    def bufferEncoder: Encoder[FreqSketch] = kryo[FreqSketch]
-    def outputEncoder: Encoder[Seq[FreqRow]] = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-  }
+  def freqItemsWeighted(k: Int) =
+    freq[(String, Long)](FreqSketch.lgSizeForTopK(k), Encoders.tuple(Encoders.STRING, Encoders.scalaLong),
+      (b, a) => if (a._1 != null && a._2 > 0) b.update(a._1, a._2), _.topK(k))
 
   /** No-false-positives heavy hitters (reference `estimate_no_fp`,
     * hh.rs:153-165): reports only items whose lower bound clears the
     * sketch's maximum error. */
-  final class FreqItemsNoFpAgg(k: Int) extends Aggregator[String, FreqSketch, Seq[FreqRow]] {
-    def zero: FreqSketch = FreqSketch.forTopK(k)
-    def reduce(b: FreqSketch, a: String): FreqSketch = { if (a != null) b.update(a); b }
-    def merge(x: FreqSketch, y: FreqSketch): FreqSketch = { x.merge(y); x }
-    def finish(b: FreqSketch): Seq[FreqRow] =
-      b.topKNoFp(k).map { case (item, est, lb, ub) => FreqRow(item, est, lb, ub) }
-    def bufferEncoder: Encoder[FreqSketch] = kryo[FreqSketch]
-    def outputEncoder: Encoder[Seq[FreqRow]] = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-  }
+  def freqItemsNoFp(k: Int) = freq[String](FreqSketch.lgSizeForTopK(k), Encoders.STRING, addItem, _.topKNoFp(k))
 
-  /** FreqItems with caller-pinned map size (exact when oversize). */
-  final class FreqItemsLgAgg(k: Int, lgMaxK: Int) extends Aggregator[String, FreqSketch, Seq[FreqRow]] {
-    def zero: FreqSketch = new FreqSketch(lgMaxK)
-    def reduce(b: FreqSketch, a: String): FreqSketch = { if (a != null) b.update(a); b }
-    def merge(x: FreqSketch, y: FreqSketch): FreqSketch = { x.merge(y); x }
-    def finish(b: FreqSketch): Seq[FreqRow] =
-      b.topK(k).map { case (item, est, lb, ub) => FreqRow(item, est, lb, ub) }
-    def bufferEncoder: Encoder[FreqSketch] = kryo[FreqSketch]
-    def outputEncoder: Encoder[Seq[FreqRow]] = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-  }
+  /** Exact top-k with a caller-pinned map size. Once the sketch has
+    * purged (more than 0.75·2^lgMaxK distinct items in some partial or
+    * merge) its counts are only bounds, so it fails instead of answering. */
+  def freqItemsLg(k: Int, lgMaxK: Int) = freq[String](lgMaxK, Encoders.STRING, addItem, { b =>
+    require(b.isExact, s"freq_items_lg(k = $k, lgMaxK = $lgMaxK) is exact only up to " +
+      s"${b.maxMapSize} distinct items and its input has more; raise lgMaxK")
+    b.topK(k)
+  })
 
-  /** MinHash signature over pre-exploded shingle-hash rows (used for the
-    * audio frame-hash path); elementwise-min merge is the monoid. */
-  final class MinHashSigAgg(numPerms: Int) extends Aggregator[Long, Array[Long], Seq[Long]] {
-    @transient private lazy val hasher = MinHasher.shared(numPerms)
-    def zero: Array[Long] = Array.fill(numPerms)(Long.MaxValue)
-    def reduce(b: Array[Long], shingleHash: Long): Array[Long] = {
-      hasher.updateSignature(b, shingleHash)
-      b
-    }
-    def merge(x: Array[Long], y: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < numPerms) { if (y(i) < x(i)) x(i) = y(i); i += 1 }
-      x
-    }
-    def finish(b: Array[Long]): Seq[Long] = b.toSeq
-    def bufferEncoder: Encoder[Array[Long]] = kryo[Array[Long]]
-    def outputEncoder: Encoder[Seq[Long]] = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-  }
+  /** MinHash signature over exploded shingle-hash rows; elementwise min is
+    * the merge. Equals `minhash_of_hashes` over the same hashes. Read
+    * boxed, so a null is skipped rather than hashed as 0. */
+  def minHashSig(numPerms: Int) =
+    new SketchAgg[java.lang.Long, Array[Long], Seq[Long]](Encoders.LONG, () => Array.fill(numPerms)(Long.MaxValue),
+      (b, h) => { if (h != null) MinHasher.shared(numPerms).updateSignature(b, h); b },
+      (x, y) => {
+        var i = 0
+        while (i < numPerms) { if (y(i) < x(i)) x(i) = y(i); i += 1 }
+        x
+      },
+      _.toSeq, ExpressionEncoder[Seq[Long]]())
 }

@@ -5,33 +5,28 @@ import graft.audio.Pcm
 import graft.sketch.{DistinctSketch, MinHasher, SimHasher}
 import graft.text.Text
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.udaf
 import org.apache.spark.sql.functions.udf
 
 /** Column-function facade over the sketch/text/audio primitives.
   *
-  * Aggregates go through `functions.udaf(Aggregator)` so Catalyst plans
-  * them as partial + final HashAggregate with only sketch state crossing
-  * the shuffle. Scalar helpers are deterministic Scala UDFs — all pure
-  * per-row maps (no shuffle), flagged `asNondeterministic` never.
+  * Aggregates apply the definitions in `graft.agg.SketchAggregators`, which
+  * Catalyst plans as partial + final HashAggregate; what crosses the
+  * shuffle is one sketch buffer per group and partition (see there).
+  * Scalar helpers are deterministic Scala UDFs — all pure per-row maps (no
+  * shuffle), flagged `asNondeterministic` never.
   */
 package object functions {
 
   // ---- distinct-count sketches (reference A1-A8) --------------------------
-  def kmv_sketch(col: Column, nomK: Int = 4096): Column =
-    udaf(new DistinctSketchAgg(nomK)).apply(col)
+  def kmv_sketch(col: Column, nomK: Int = 4096): Column = kmvSketch(nomK).udf(col)
 
-  def kmv_est(col: Column, nomK: Int = 4096): Column =
-    udaf(new DistinctEstAgg(nomK)).apply(col)
+  def kmv_est(col: Column, nomK: Int = 4096): Column = kmvEst(nomK).udf(col)
 
-  def kmv_est_long(col: Column, nomK: Int = 4096): Column =
-    udaf(new DistinctEstLongAgg(nomK)).apply(col)
+  def kmv_est_long(col: Column, nomK: Int = 4096): Column = kmvEstLong(nomK).udf(col)
 
-  def kmv_merge_est(sketchCol: Column): Column =
-    udaf(new MergeEstAgg).apply(sketchCol)
+  def kmv_merge_est(sketchCol: Column): Column = kmvMergeEst.udf(sketchCol)
 
-  def kmv_merge(sketchCol: Column): Column =
-    udaf(new MergeSketchAgg).apply(sketchCol)
+  def kmv_merge(sketchCol: Column): Column = kmvMerge.udf(sketchCol)
 
   // ---- theta set algebra on serialized sketches (reference A6-A8) ----------
   val theta_union_est = udf((a: Array[Byte], b: Array[Byte]) =>
@@ -44,26 +39,21 @@ package object functions {
     DistinctSketch.aNotB(DistinctSketch.deserialize(a), DistinctSketch.deserialize(b)).estimate)
 
   // ---- heavy hitters (reference A9-A11) ------------------------------------
-  def freq_items(col: Column, k: Int): Column =
-    udaf(new FreqItemsAgg(k)).apply(col)
+  def freq_items(col: Column, k: Int): Column = freqItems(k).udf(col)
 
   /** freq_items with an explicit map size — oversize it past the distinct
     * count and the result is EXACT (offset stays 0), which turns the HH
-    * sketch into an oracle-checkable exact top-k. */
-  def freq_items_lg(col: Column, k: Int, lgMaxK: Int): Column =
-    udaf(new FreqItemsLgAgg(k, lgMaxK)).apply(col)
+    * sketch into an oracle-checkable exact top-k. Undersize it and the
+    * query fails rather than return approximate rows. */
+  def freq_items_lg(col: Column, k: Int, lgMaxK: Int): Column = freqItemsLg(k, lgMaxK).udf(col)
 
   /** Weighted heavy hitters: each row contributes `weight` occurrences
     * (reference HhSketch::update(bytes, weight), hh.rs:127-151). */
   def freq_items_weighted(col: Column, weight: Column, k: Int): Column =
-    udaf(new FreqItemsWeightedAgg(k),
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.STRING,
-        org.apache.spark.sql.Encoders.scalaLong)).apply(col, weight)
+    freqItemsWeighted(k).udf(col, weight)
 
   /** No-false-positives heavy hitters (lb-based view, hh.rs:153-165). */
-  def freq_items_no_fp(col: Column, k: Int): Column =
-    udaf(new FreqItemsNoFpAgg(k)).apply(col)
+  def freq_items_no_fp(col: Column, k: Int): Column = freqItemsNoFp(k).udf(col)
 
   // ---- text boundary for sketches (reference counters.rs:28-39 uses
   // base64 STANDARD_NO_PAD for sketch payloads on stdout/stdin) ----------
@@ -75,7 +65,7 @@ package object functions {
 
   // ---- minhash / simhash / shingling ---------------------------------------
   def minhash_sig_agg(shingleHashCol: Column, numPerms: Int): Column =
-    udaf(new MinHashSigAgg(numPerms)).apply(shingleHashCol)
+    minHashSig(numPerms).udf(shingleHashCol)
 
   val shingle_hashes = udf((text: String, k: Int) =>
     if (text == null) Array.emptyLongArray else Text.shingleHashes(text, k))

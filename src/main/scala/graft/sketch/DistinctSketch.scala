@@ -1,5 +1,7 @@
 package graft.sketch
 
+import com.esotericsoftware.kryo.{Kryo, KryoSerializable}
+import com.esotericsoftware.kryo.io.{Input, Output}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.Arrays
 
@@ -120,13 +122,21 @@ object DistinctSketch {
   }
 }
 
-/** Mutable update sketch. Not thread-safe (one per aggregation buffer). */
-final class DistinctSketch(val nomK: Int) {
+/** Mutable update sketch. Not thread-safe (one per aggregation buffer).
+  *
+  * Its Kryo form is its canonical compact sketch (`compact().serialize()`),
+  * so an aggregation buffer crosses the shuffle as 17 + 8·min(n, nomK)
+  * bytes, whatever its table holds. */
+final class DistinctSketch(k: Int) extends KryoSerializable {
   import DistinctSketch._
 
-  require(nomK >= 16, "nomK too small")
-  // open-addressing long set; 0 encodes empty (hash 0 tracked via flag)
-  private var capacity = Integer.highestOneBit(math.max(32, nomK / 2) - 1) << 1
+  require(k >= 16, "nomK too small")
+  private var _nomK = k
+  def nomK: Int = _nomK
+  // open-addressing long set; 0 encodes empty (hash 0 tracked via flag).
+  // It starts small and `grow`s: a keyed aggregate holds one sketch per
+  // group, and most groups see far fewer than nomK values.
+  private var capacity = 32
   private var table = new Array[Long](capacity)
   private var size = 0
   private var hasZero = false
@@ -203,7 +213,6 @@ final class DistinctSketch(val nomK: Int) {
       // drop retained values now >= theta
       val vals = currentValues().filter(_ < theta)
       capacity = Integer.highestOneBit(math.max(32, vals.length * 2) - 1) << 1
-      if (capacity < 32) capacity = 32
       table = new Array[Long](capacity)
       size = 0
       hasZero = false
@@ -228,4 +237,19 @@ final class DistinctSketch(val nomK: Int) {
   }
 
   def estimate: Double = compact().estimate
+
+  def write(kryo: Kryo, out: Output): Unit = {
+    val bytes = compact().serialize()
+    out.writeInt(bytes.length, true)
+    out.writeBytes(bytes)
+  }
+
+  /** Fills a sketch that Kryo built empty with the no-arg constructor;
+    * nomK comes from the bytes. */
+  def read(kryo: Kryo, in: Input): Unit = {
+    val c = deserialize(in.readBytes(in.readInt(true)))
+    require(c.nomK >= 16, "nomK too small")
+    _nomK = c.nomK
+    mergeCompact(c)
+  }
 }

@@ -67,4 +67,47 @@ class SourcesSpec extends AnyFunSuite {
     assert(sim != 0L)
     assert(spark.sql("SELECT is_substring('bc', 'abcd')").head.getBoolean(0))
   }
+
+  test("SQL surface: every function registerAll registers runs from spark.sql") {
+    def temporary(x: org.apache.spark.sql.SparkSession) =
+      x.catalog.listFunctions().collect().filter(_.isTemporary).map(_.name).toSet
+    val s = spark.newSession() // its own function registry
+    GraftFunctions.registerAll(s)
+    val strs = "VALUES ('a b c d e'), ('a b x'), (CAST(NULL AS STRING)) t(s)"
+    val sks = s"(SELECT kmv_sketch(s) AS sk FROM $strs)"
+    val calls = Map(
+      "kmv_sketch" -> s"SELECT length(kmv_sketch(s)) FROM $strs",
+      "kmv_est" -> s"SELECT kmv_est(s) FROM $strs",
+      "kmv_est_long" -> "SELECT kmv_est_long(v) FROM VALUES (1L), (2L), (CAST(NULL AS BIGINT)) t(v)",
+      "kmv_merge_est" -> s"SELECT kmv_merge_est(sk) FROM $sks",
+      "kmv_merge" -> s"SELECT length(kmv_merge(sk)) FROM $sks",
+      "freq_items3" -> s"SELECT size(freq_items3(s)) FROM $strs",
+      "freq_items20_exact" -> s"SELECT size(freq_items20_exact(s)) FROM $strs",
+      "minhash_sig_agg" -> "SELECT size(minhash_sig_agg(h)) FROM VALUES (1L), (7L) t(h)",
+      "theta_union_est" -> s"SELECT theta_union_est(sk, sk) FROM $sks",
+      "theta_intersect_est" -> s"SELECT theta_intersect_est(sk, sk) FROM $sks",
+      "theta_anotb_est" -> s"SELECT theta_anotb_est(sk, sk) FROM $sks",
+      "shingle_hashes" -> "SELECT size(shingle_hashes('hello world', 3))",
+      "minhash_text" -> "SELECT size(minhash_text('hello world', 3, 16))",
+      "band_hashes" -> "SELECT size(band_hashes(minhash_text('hello world', 3, 16), 4, 4))",
+      "simhash_text" -> "SELECT simhash_text('hello world again')",
+      "simhash_buckets" -> "SELECT size(simhash_buckets(12345L, 4))",
+      "hamming" -> "SELECT hamming(7L, 0L)",
+      "exact_jaccard" -> "SELECT exact_jaccard('hello world', 'hello word', 3)",
+      "exact_containment" -> "SELECT exact_containment('hello', 'hello world', 3)",
+      "winnow_hashes" -> "SELECT size(winnow_hashes('hello world again', 3, 4))",
+      "is_substring" -> "SELECT is_substring('bc', 'abcd')",
+      "lang_id" -> "SELECT lang_id('the cat sat on the mat')",
+      "bpeish_token_count" -> "SELECT bpeish_token_count('hello world')",
+      "rolling_fp" -> "SELECT rolling_fp('hello world')",
+      "audio_fp_hashes" -> "SELECT size(audio_fp_hashes(X'0102030405060708', 'stub', 16000))",
+      "audio_n_samples" -> "SELECT audio_n_samples(X'01020304', 'stub')")
+    assert(temporary(s) -- temporary(spark.newSession()) == calls.keySet)
+    calls.foreach { case (name, q) =>
+      val rows = s.sql(q).collect()
+      assert(rows.length == 1 && !rows.head.isNullAt(0), s"$name: ${rows.toSeq}")
+    }
+    assert(s.sql(calls("kmv_est_long")).head.getDouble(0) == 2.0)
+    assert(s.sql(calls("kmv_est")).head.getDouble(0) == 2.0)
+  }
 }
