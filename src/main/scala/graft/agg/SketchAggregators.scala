@@ -63,13 +63,13 @@ object SketchAggregators {
   def kmvEstLong(nomK: Int) =
     kmv[java.lang.Long, Double](nomK, Encoders.LONG, _.updateLong(_), _.estimate, Encoders.scalaDouble)
 
-  // Merges start from an empty nomK-4096 compact, so the merged nomK is
-  // min(4096, inputs') and kmv_merge's bytes carry it.
+  // Merges fold each partial into one mutable nomK-4096 sketch, which
+  // takes the smallest nomK it meets: the merged nomK is min(4096,
+  // inputs'), kmv_merge's bytes carry it, and the result is
+  // DistinctSketch.union's, bit for bit.
   private def kmvUnion[O](done: DistinctSketch.Compact => O, out: Encoder[O]) =
-    new SketchAgg[Array[Byte], DistinctSketch.Compact, O](Encoders.BINARY,
-      () => DistinctSketch.emptyCompact(1 << DistinctSketch.DefaultLgK),
-      (b, a) => if (a == null) b else DistinctSketch.union(Seq(b, DistinctSketch.deserialize(a))),
-      (x, y) => DistinctSketch.union(Seq(x, y)), done, out)
+    kmv[Array[Byte], O](1 << DistinctSketch.DefaultLgK, Encoders.BINARY,
+      (b, a) => b.mergeCompact(DistinctSketch.deserialize(a)), b => done(b.compact()), out)
 
   /** Merge serialized sketches -> estimate (the --merge analog,
     * /root/reference/src/main.rs:103-127). */

@@ -1,8 +1,11 @@
 package graft.io
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Iceberg-style checkpoint tables: atomic snapshot commit, per-stage
   * lineage rows, resume.
@@ -27,6 +30,15 @@ import org.apache.spark.sql.functions._
   *    This is the table-checkpoint promotion of the reference's
   *    --raw/--merge restartability (/root/reference/src/main.rs:63-76,
   *    SURVEY §1.2).
+  *
+  * A snapshot file `_snapshots/<stage>-<key>.json` is one JSON object:
+  * `stage`, `config_hash` (the snapshot key), `location` (the data
+  * directory), `rows`, `wall_ms` and `schema` (the data's Spark schema as
+  * read back after the write, in `StructType.json` form). Like Iceberg's
+  * table metadata, the schema lets `read` plan the data without opening
+  * a data file: reading a snapshot starts no Spark job. Snapshots written
+  * before the schema field existed still read, with parquet schema
+  * inference (one footer-reading job).
   */
 final class TableIO(spark: SparkSession, root: String) {
 
@@ -47,11 +59,14 @@ final class TableIO(spark: SparkSession, root: String) {
   def read(stage: String, key: String): DataFrame = {
     val p = snapPath(stage, key)
     val in = fsFor(p).open(p)
-    val json = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-    finally in.close()
-    val loc = """"location"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(json)
-      .getOrElse(sys.error(s"corrupt snapshot for $stage")).group(1)
-    spark.read.parquet(loc)
+    val snap = try TableIO.Json.readTree(in) finally in.close()
+    val loc = Option(snap.get("location")).filter(_.isTextual)
+      .getOrElse(sys.error(s"corrupt snapshot for $stage")).asText()
+    Option(snap.get("schema")) match {
+      case Some(schema) =>
+        spark.read.schema(DataType.fromJson(schema.toString).asInstanceOf[StructType]).parquet(loc)
+      case None => spark.read.parquet(loc) // written before the schema field
+    }
   }
 
   /** Write df as a new snapshot of `stage` and publish it atomically. */
@@ -78,11 +93,12 @@ final class TableIO(spark: SparkSession, root: String) {
     val fs = fsFor(dir)
     fs.mkdirs(dir)
     val tmp = new HPath(dir, s".$stage-$key.$token.tmp")
+    val snap = TableIO.Json.createObjectNode()
+      .put("stage", stage).put("config_hash", key).put("location", loc)
+      .put("rows", totalRows).put("wall_ms", wallMs)
+    snap.set[ObjectNode]("schema", TableIO.Json.readTree(out.schema.json))
     val os = fs.create(tmp, true)
-    try os.write(
-      s"""{"stage":"$stage","config_hash":"$key","location":"$loc","rows":$totalRows,"wall_ms":$wallMs}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally os.close()
+    try os.write(TableIO.Json.writeValueAsBytes(snap)) finally os.close()
     if (!fs.rename(tmp, snapPath(stage, key)))
       sys.error(s"failed to publish snapshot for $stage (concurrent writer?)")
     out
@@ -97,6 +113,8 @@ final class TableIO(spark: SparkSession, root: String) {
 }
 
 object TableIO {
+  private val Json = new ObjectMapper()
+
   /** Stage-table layout version. Part of every snapshot key: bump it when
     * any stage's output schema changes, so a checkpoint root written by a
     * previous build is recomputed instead of served with a stale layout

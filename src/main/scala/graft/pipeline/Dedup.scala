@@ -668,14 +668,21 @@ object Dedup {
     * snapshots and recomputes only what is missing (north rule:
     * "resumable from checkpoint with per-partition lineage + metrics").
     * The table write is the explicit materialization barrier — the
-    * promoted form of the reference's --raw/--merge seam (SURVEY §1.2). */
+    * promoted form of the reference's --raw/--merge seam (SURVEY §1.2).
+    *
+    * Resume is newest-first: a stage's snapshot is opened only when a
+    * later stage has to be computed from it. A restart whose `clusters`
+    * snapshot exists costs the input fingerprint plus that one snapshot
+    * read (which starts no Spark job, see TableIO); one missing only
+    * `clusters` reads `edges` and never touches `signatures` or
+    * `candidates`. */
   def runCheckpointed(spark: SparkSession, clips: DataFrame, cfg: DedupConfig,
       checkpointRoot: String): DataFrame = {
     val io = new graft.io.TableIO(spark, checkpointRoot)
     val h = graft.io.TableIO.snapshotKey(cfg, clips)
-    val sigs = io.readOrCompute("signatures", h)(signatures(clips, cfg))
-    val cands = io.readOrCompute("candidates", h)(candidates(sigs, cfg))
-    val edges = io.readOrCompute("edges", h)(verify(sigs, cands, cfg))
+    lazy val sigs = io.readOrCompute("signatures", h)(signatures(clips, cfg))
+    lazy val cands = io.readOrCompute("candidates", h)(candidates(sigs, cfg))
+    lazy val edges = io.readOrCompute("edges", h)(verify(sigs, cands, cfg))
     io.readOrCompute("clusters", h)(clusters(spark, clips, edges))
   }
 

@@ -207,7 +207,11 @@ final class DistinctSketch(k: Int) extends KryoSerializable {
 
   @inline def updateHash(h: Long): Unit = if (h < theta) insert(h)
 
+  /** Union with `c` at the smaller of the two nominal k (as
+    * `DistinctSketch.union`); a larger retained set is trimmed by the
+    * next insert or by `compact`. */
   def mergeCompact(c: DistinctSketch.Compact): Unit = {
+    if (c.nomK < _nomK) _nomK = c.nomK
     if (c.theta < theta) {
       theta = c.theta
       // drop retained values now >= theta

@@ -234,6 +234,32 @@ class QueriesSpec extends AnyFunSuite {
     assert(viaSa.nonEmpty)
   }
 
+  test("sharedSpanFlagPairs equals sharedSpanPairs on astral text at the 47-code-point boundary") {
+    // containment flags and the >= minSpan gate count code points, not
+    // UTF-16 units: 47 astral code points are 94 chars, 46 are 92
+    import graft.pipeline.{Dedup, DedupConfig}
+    def astral(from: Int, n: Int): String =
+      (from until from + n).map(i => new String(Character.toChars(0x1F300 + i))).mkString
+    val s47 = astral(0, 47)
+    val docs = Seq(
+      "d1" -> s47,                                     // exactly 47 code points
+      "d2" -> ("x" + astral(0, 48) + "y"),             // contains d1
+      "d3" -> (astral(0, 46) + "é" + astral(100, 40)), // shares only 46 with d1, d2
+      "d4" -> ("ab" + astral(1, 47) + "c"),            // shares 46 with d1, 47 with d2
+      "d5" -> s47,                                     // equal to d1: both flags
+      "d6" -> ("q" + astral(200, 60)))                 // shares nothing
+      .toDF("id", "text")
+    val viaSa = Dedup.sharedSpanPairs(docs, "id", "text", DedupConfig(), minSpan = 47)
+      .select($"a", $"b", $"a_in_b", $"b_in_a")
+      .as[(String, String, Boolean, Boolean)].collect().toSet
+    val viaFlags = Dedup.sharedSpanFlagPairs(docs, "id", "text", DedupConfig(), minSpan = 47)
+      .as[(String, String, Boolean, Boolean)].collect().toSet
+    assert(viaFlags == viaSa)
+    assert(viaSa == Set(
+      ("d1", "d2", true, false), ("d1", "d5", true, true), ("d2", "d5", false, true),
+      ("d2", "d4", false, false)))
+  }
+
   test("q_cc_clusters equals driver-side union-find over the verified pairs") {
     val pairs = q("q_minhash_lsh_docs").select($"a", $"b").as[(Long, Long)].collect()
     val parent = scala.collection.mutable.Map.empty[Long, Long]

@@ -3,8 +3,11 @@ package graft
 import graft.gen.ClipGen
 import graft.io.TableIO
 import graft.pipeline.{Dedup, DedupConfig}
+import org.apache.spark.graft.ListenerBusBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 /** Checkpoint/resume behavior (SURVEY §5 partition-invariance analog +
@@ -20,6 +23,33 @@ class ResumeSpec extends AnyFunSuite {
     val p = Files.createTempDirectory(s"graft-ckpt-$tag")
     p.toString
   }
+
+  /** Runs `body` in its own job group and returns its result with the
+    * stage names (call sites, e.g. "parquet at TableIO.scala:54") of
+    * every Spark job it started. */
+  private def jobsOf[T](body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val group = s"resume-spec-${java.util.UUID.randomUUID()}"
+    val stages = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          stages.add(e.stageInfos.map(_.name).mkString(" | "))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "ResumeSpec")
+    try {
+      val out = body
+      ListenerBusBridge.drain(sc)
+      (out, stages.asScala.toSeq)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private def deleteTree(p: java.nio.file.Path): Unit =
+    Files.walk(p).sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
 
   test("checkpointed run equals in-memory run; snapshots published per stage") {
     val clips = ClipGen.generate(spark, nClips = 300, seed = 7L)._1.toDF().cache()
@@ -86,5 +116,75 @@ class ResumeSpec extends AnyFunSuite {
       .as[(String, String)].collect().toMap
     val freshB = Dedup.run(spark, b, cfg).as[(String, String)].collect().toMap
     assert(outB == freshB, "resume served results from the wrong input")
+  }
+
+  test("a full restart reads only the clusters snapshot and starts no TableIO parquet job") {
+    val clips = ClipGen.generate(spark, nClips = 200, seed = 11L)._1.toDF().cache()
+    val root = freshRoot("newest")
+    val first = Dedup.runCheckpointed(spark, clips, cfg, root).as[(String, String)].collect().toMap
+    val (again, jobs) = jobsOf(Dedup.runCheckpointed(spark, clips, cfg, root)
+      .as[(String, String)].collect().toMap)
+    assert(again == first)
+    assert(jobs.nonEmpty, "the listener saw no job at all")
+    assert(!jobs.exists(_.contains("parquet at TableIO")), s"restart inferred a snapshot schema: $jobs")
+    // the earlier stages' data is never opened: deleting it changes nothing
+    Seq("signatures", "candidates", "edges").foreach(st => deleteTree(Paths.get(root, st)))
+    val without = Dedup.runCheckpointed(spark, clips, cfg, root).as[(String, String)].collect().toMap
+    assert(without == first)
+  }
+
+  test("a restart missing only clusters reads edges, not signatures or candidates") {
+    val clips = ClipGen.generate(spark, nClips = 200, seed = 11L)._1.toDF().cache()
+    val root = freshRoot("edges")
+    val first = Dedup.runCheckpointed(spark, clips, cfg, root).as[(String, String)].collect().toMap
+    val h = TableIO.snapshotKey(cfg, clips)
+    Files.delete(Paths.get(root, "_snapshots", s"clusters-$h.json"))
+    Seq("signatures", "candidates").foreach(st => deleteTree(Paths.get(root, st)))
+    val resumed = Dedup.runCheckpointed(spark, clips, cfg, root).as[(String, String)].collect().toMap
+    assert(resumed == first)
+    assert(Files.exists(Paths.get(root, "_snapshots", s"clusters-$h.json")), "clusters not republished")
+  }
+
+  test("a snapshot carries its schema: read starts no Spark job, even under a quoted root") {
+    val root = freshRoot("quote\"d")
+    val io = new TableIO(spark, root)
+    val df = Seq((1L, "a", Seq(1.5, 2.5)), (2L, null, Seq.empty[Double])).toDF("id", "s", "xs")
+    val written = io.commit("stage", "k1", df)
+    val (read, jobs) = jobsOf {
+      val r = io.read("stage", "k1")
+      r.schema
+      r
+    }
+    assert(jobs.isEmpty, s"read started jobs: $jobs")
+    assert(read.schema == written.schema)
+    assert(read.as[(Long, String, Seq[Double])].collect().toSet == df.as[(Long, String, Seq[Double])].collect().toSet)
+    val snap = new String(Files.readAllBytes(Paths.get(root, "_snapshots", "stage-k1.json")), "UTF-8")
+    Seq("\"stage\"", "\"config_hash\"", "\"location\"", "\"rows\":2", "\"wall_ms\"", "\"schema\"")
+      .foreach(f => assert(snap.contains(f), s"snapshot lacks $f: $snap"))
+  }
+
+  test("a snapshot written without a schema field (older roots) still reads") {
+    val root = freshRoot("legacy")
+    val loc = s"$root/stage/data-legacy"
+    val df = Seq((1L, "a"), (2L, "b"), (3L, null)).toDF("id", "s")
+    df.write.parquet(loc)
+    Files.createDirectories(Paths.get(root, "_snapshots"))
+    Files.write(Paths.get(root, "_snapshots", "stage-k0.json"),
+      s"""{"stage":"stage","config_hash":"k0","location":"$loc","rows":3,"wall_ms":1}""".getBytes("UTF-8"))
+    val got = new TableIO(spark, root).read("stage", "k0")
+    assert(got.columns.toSeq == Seq("id", "s"))
+    assert(got.as[(Long, String)].collect().toSet == df.as[(Long, String)].collect().toSet)
+  }
+
+  test("golden snapshot-key inputs: fingerprint and config hash keep their values") {
+    // a change to either orphans (or aliases) every existing checkpoint
+    // root; it must be deliberate, with LayoutVersion bumped or noted
+    val df = Seq(
+      ("c1", Array[Byte](1, 2, 3), 8000, "hello world"),
+      ("c2", Array.emptyByteArray, 16000, null),
+      ("c3", null, 8000, "ünïcödé 😀"))
+      .toDF("clip_id", "bytes", "sr_hz", "transcript")
+    assert(TableIO.inputFingerprint(df) == "38931098d0de34973")
+    assert(TableIO.configHash(DedupConfig()) == "85142a38dd0cca0f")
   }
 }

@@ -74,6 +74,18 @@ class SketchAggSpec extends AnyFunSuite {
     assert(merged.toSeq == want.serialize().toSeq)
   }
 
+  test("kmv_merge over 400 saturated nomK-4096 partials in one group equals DistinctSketch.union") {
+    // overlapping ranges, each partial far past saturation: the combiner
+    // tree's --merge side with many partials per key
+    val partials = (0 until 400).map(i => sketchOf(4096, (i * 1000 until i * 1000 + 6000).map(j => s"p$j")).compact())
+    val df = partials.map(_.serialize()).toDF("sk").repartition(4)
+    val (m, e) = df.agg(kmv_merge($"sk"), kmv_merge_est($"sk")).as[(Array[Byte], Double)].head()
+    val want = DistinctSketch.union(partials)
+    assert(want.theta < DistinctSketch.MaxTheta && want.hashes.length == 4096)
+    assert(m.toSeq == want.serialize().toSeq)
+    assert(e == want.estimate)
+  }
+
   test("kmv_est_long skips nulls like countDistinct") {
     val df = Seq[java.lang.Long](1L, 2L, null, null).toDF("v").repartition(2)
     val row = df.agg(kmv_est_long($"v"), countDistinct($"v")).head()
