@@ -515,7 +515,14 @@ object SparkEntry {
     * filter (min >= ceil(tau*max)) and the PPJoin positional filter cut
     * candidates further before any payload binds. Verification touches
     * candidates only: each doc's word-id set (dense dictionary, see below)
-    * is collected once and intersected with a codegen merge walk.
+    * is bound to both ends of a pair (Dedup.bindPairs) and intersected with
+    * a codegen merge walk.
+    *
+    * No barrier anywhere: the word-id sets are one aggregate whose
+    * exchange both payload joins read (the second as a ReusedExchange),
+    * and because that aggregate is a shuffle-stage output, AQE sees its
+    * real size and broadcasts it when it is small. No cached block
+    * outlives the query.
     *
     * Exposed for the plan/size spec (candidate shrink assertion). */
   private[graft] def wordJaccardPairs(documents: DataFrame, tau: Double): DataFrame = {
@@ -536,38 +543,19 @@ object SparkEntry {
     val vocab = words.select(col("w")).distinct()
       .repartition(col("w")).sortWithinPartitions(col("w"))
       .rdd.map(_.getString(0)).zipWithIndex().toDF("w", "wid")
-    // persisted: both payload joins below consume `sets`, and without the
-    // barrier each join re-runs the whole explode + vocab + collect_set
-    // subtree (the r6 baseline plan materialized it twice, including two
-    // zipWithIndex jobs). One doc-count-sized frame, computed once.
+    // ws is a sort_array output — the codegen merge walk replaces
+    // array_intersect's per-row hash set
     val sets = words.join(vocab, "w")
       .groupBy(col("doc_id")).agg(sort_array(collect_set(col("wid"))).as("ws"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // The count populates the persist eagerly AND drives a runtime join-
-    // strategy choice the planner cannot make itself: `sets` is an
-    // aggregate output, so its static size estimate is inflated and both
-    // payload joins planned as sort-merge — two full exchanges + sorts of
-    // the ~candidate-count frame (10.8M rows at sf0.1) to bind a
-    // doc-count-sized table. Below a conservative row bound we hint
-    // broadcast (what AQE would do with honest stats); above it the
-    // planner's shuffle join stands, which is the correct shape at
-    // corpus scale.
-    val setsRows = sets.count()
-    val setsJ = if (setsRows <= 200000) broadcast(sets) else sets
     // explicit round-robin repartition: the candidate frame is byte-tiny
     // (two longs per row) but each row costs a merge walk + two array
     // binds downstream, and AQE's bytes-based coalescing was running the
     // whole verification on a handful of tasks (same reasoning as the
     // pinned repartition in Dedup.sharedSpanPairs).
     val shufN = sp.sessionState.conf.numShufflePartitions
-    val candP = cand.repartition(shufN)
-    val withA = candP.join(setsJ.select(col("doc_id").as("a"), col("ws").as("wa")), "a")
-    val withB = withA.join(setsJ.select(col("doc_id").as("b"), col("ws").as("wb")), "b")
-    // ws is a sort_array output — the codegen merge walk replaces
-    // array_intersect's per-row hash set
-    val inter = sorted_intersect_count(col("wa"), col("wb")).cast("double")
-    withB
-      .withColumn("j", round(inter / (size(col("wa")) + size(col("wb")) - inter), 6))
+    val inter = sorted_intersect_count(col("ws_a"), col("ws_b")).cast("double")
+    Dedup.bindPairs(cand.repartition(shufN), sets, "doc_id")
+      .withColumn("j", round(inter / (size(col("ws_a")) + size(col("ws_b")) - inter), 6))
       .where(col("j") >= tau)
       .select(col("a"), col("b"), col("j"))
   }
@@ -580,14 +568,11 @@ object SparkEntry {
     val ranked = words.join(dfreq, "w")
       .withColumn("rk", row_number().over(byDoc.orderBy(col("df"), col("w"))))
       .withColumn("n", count(lit(1)).over(byDoc))
-    // Persisted: the prefix frame is BOTH sides of the self-join below,
-    // and without a barrier the scan + dfreq + two-window subtree runs
-    // twice (the r6 baseline plan had two full copies). It is small (one
-    // row per (doc, prefix token)) while everything upstream of it is the
-    // expensive part.
+    // The prefix frame is BOTH sides of the self-join below, with no
+    // barrier: the two sides share the window's exchange, which AQE runs
+    // once and the second side reads as a ReusedExchange (PlansSpec).
     val prefix = ranked.where(col("rk") <= col("n") - ceil(lit(tau) * col("n")) + 1)
       .select(col("w"), col("doc_id"), col("rk"), col("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // PPJoin INDEX-PREFIX asymmetry (Xiao et al.): orient each unordered
     // pair so the size-SMALLER doc (ties: smaller id) probes with its
     // shorter 2tau/(1+tau)-prefix while the larger doc is indexed by the
@@ -646,7 +631,11 @@ object SparkEntry {
     * (29s at sf0.1). At r=5/b=25 the J=0.2 mass collides at p = 25*0.2^5
     * = 0.008 (30k candidates) while a true pair is missed with p =
     * (1-0.83^5)^25 = 4e-6 (1e-13 at the sf0.01 gate, where min
-    * qualifying J = 0.93). */
+    * qualifying J = 0.93).
+    *
+    * The shingle payload has no barrier: both payload joins read its one
+    * exchange (the second as a ReusedExchange), so the shingle explode
+    * runs once and no cached block outlives the call. */
   private def lshVerifiedDocPairs(s: SparkSession, dir: String): DataFrame = {
     // round-robin repartition off the single-file scan: the 128-perm
     // minhash and the shingle explode below are the per-row hot loops of
@@ -671,17 +660,11 @@ object SparkEntry {
     // computed ONCE PER DOC (sorted at source), intersection via the
     // codegen merge walk — never a per-pair re-shingling UDF (measured
     // 2.7 ms/pair; this form is ~150x cheaper and is what Dedup.verify
-    // uses at scale). Persisted: BOTH payload joins consume it, and
-    // without the barrier each join re-runs the shingle explode.
-    val sh = docs.select(Dedup.sidOf(col("clip_id")).as("sid"), col("clip_id"),
+    // uses at scale)
+    val sh = docs.select(Dedup.sidOf(col("clip_id")).as("sid"), col("clip_id").as("id"),
       shingle_hashes(col("transcript"), lit(cfg.shingleK)).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val withA = cands.join(sh.select(col("sid").as("a"),
-      col("clip_id").as("id_a"), col("sh").as("sh_a")), "a")
-    val withB = withA.join(sh.select(col("sid").as("b"),
-      col("clip_id").as("id_b"), col("sh").as("sh_b")), "b")
     val inter = sorted_intersect_count(col("sh_a"), col("sh_b")).cast("double")
-    withB
+    Dedup.bindPairs(cands, sh, "sid")
       .withColumn("j", round(inter / (size(col("sh_a")) + size(col("sh_b")) - inter), 6))
       .where(col("j") >= cfg.tau)
       // candidate order is sid hash order; re-canonicalize numerically

@@ -78,8 +78,11 @@ final class TableIO(spark: SparkSession, root: String) {
     val wallMs = (System.nanoTime() - t0) / 1000000
     // per-partition counters in ONE count-only pass over the written
     // parquet (row-group metadata scan, no columns); total rows comes from
-    // summing these — never a second full count() pass over the data
-    val out = spark.read.parquet(loc)
+    // summing these — never a second full count() pass over the data.
+    // The read-back takes the schema just written instead of inferring it
+    // (a footer-reading job per commit); a file source makes every field
+    // nullable either way, so `out.schema` equals the inferred one.
+    val out = spark.read.schema(df.schema).parquet(loc)
     val partRows = out.groupBy(spark_partition_id().as("partition_id"))
       .agg(count(lit(1)).as("rows_out"))
       .collect()

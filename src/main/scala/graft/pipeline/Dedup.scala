@@ -448,11 +448,8 @@ object Dedup {
       .select(col("a"), col("b")).distinct()
     // sid -> (clip_id, text) decode and payload join in one: the dict is
     // a pure projection of the input docs
-    val dict = d.select(sidOf(col("clip_id")).as("sid"), col("clip_id"), col("text"))
-    val withA = cands.join(dict.select(col("sid").as("a"),
-      col("clip_id").as("id_a"), col("text").as("text_a")), "a")
-    val withB = withA.join(dict.select(col("sid").as("b"),
-      col("clip_id").as("id_b"), col("text").as("text_b")), "b")
+    val dict = d.select(sidOf(col("clip_id")).as("sid"), col("clip_id").as("id"), col("text"))
+    val bound = bindPairs(cands, dict, "sid")
     // The per-pair SA verify costs per PAIR, not per byte, and the
     // candidate shuffle is only ids — AQE's bytes-proportional partition
     // coalescing would run the whole verify on a handful of tasks
@@ -466,7 +463,7 @@ object Dedup {
     // swap back to string id order so a_in_b refers to the output's a.
     val shufN = docs.sparkSession.sessionState.conf.numShufflePartitions
     import docs.sparkSession.implicits._
-    withB.select(col("id_a"), col("id_b"), col("text_a"), col("text_b"))
+    bound.select(col("id_a"), col("id_b"), col("text_a"), col("text_b"))
       .repartition(shufN)
       .as[(String, String, String, String)]
   }
@@ -481,11 +478,8 @@ object Dedup {
     val pairs = pairsFromBuckets(buckets(sigs, cfg, Seq("minhash")),
         cfg.hotBucketLimit, cfg.saltMaxBucket)
       .distinct()
-    val dict = sigs.select(sidOf(col("clip_id")).as("sid"), col("clip_id"))
     val swap = col("id_a") > col("id_b")
-    pairs
-      .join(dict.select(col("sid").as("a"), col("clip_id").as("id_a")), "a")
-      .join(dict.select(col("sid").as("b"), col("clip_id").as("id_b")), "b")
+    bindPairs(pairs, sigs.select(sidOf(col("clip_id")).as("sid"), col("clip_id").as("id")), "sid")
       .select(
         when(swap, col("id_b")).otherwise(col("id_a")).as("a"),
         when(swap, col("id_a")).otherwise(col("id_b")).as("b"),
@@ -535,35 +529,39 @@ object Dedup {
         }: _*)).as("sources"))
   }
 
-  /** Stage 3: exact verification. Joins payloads back by id (sort-merge on
-    * clip_id — the only wide join) and keeps pairs passing any criterion:
-    * exact shingle-Jaccard >= tau, shingle containment >= containmentTau,
-    * or audio frame-set Jaccard >= audioTau. */
+  /** The one pair-binding join: `pairs` (id columns `a`, `b`) keeps its
+    * columns and gains, for each column `c` of `payload` other than its id
+    * column `key`, `c_a` (the payload of `a`) and `c_b` (of `b`). Inner
+    * joins: a pair with an end missing from `payload` is dropped. No
+    * persist and no repartition: both joins read one payload subtree, whose
+    * exchange runs once and is read back as a ReusedExchange (PlansSpec);
+    * a caller that wants the payload pruned or pre-partitioned does that
+    * before the call. */
+  private[graft] def bindPairs(pairs: DataFrame, payload: DataFrame, key: String): DataFrame = {
+    val rest = payload.columns.toSeq.filterNot(_ == key)
+    def end(e: String): DataFrame =
+      payload.select(col(key).as(e) +: rest.map(c => col(c).as(s"${c}_$e")): _*)
+    pairs.join(end("a"), "a").join(end("b"), "b")
+  }
+
+  /** Stage 3: exact verification. Joins payloads back by id (the only wide
+    * join) and keeps pairs passing any criterion: exact shingle-Jaccard >=
+    * tau, shingle containment >= containmentTau, or audio frame-set
+    * Jaccard >= audioTau. */
   def verify(sigs: DataFrame, cands: DataFrame, cfg: DedupConfig): DataFrame = {
     // shingle sets and audio fingerprints were computed ONCE PER CLIP in
     // the signature pass (never once per candidate pair — measured
-    // 2.7ms/pair in per-pair UDF form; the array_intersect form is
-    // codegen'd and ~50x cheaper) and arrive here as sig columns. The
-    // pruned projection is shuffled once so the two id joins below read
-    // compact (id, transcript, sh, afp) rows instead of full sig rows
-    // (a checkpointed table cannot be column-pruned).
-    // pre-partitioned by clip_id: the aliased projections below keep the
-    // partitioning (alias-aware), so NEITHER id join reshuffles the wide
-    // payload — only the skinny candidate side and the one unavoidable
-    // wide intermediate move. Two payload-sized shuffles saved.
+    // 2.7ms/pair in per-pair UDF form; the merge-walk form is codegen'd
+    // and ~50x cheaper). The pruned projection is keyed by the candidate
+    // stage's 64-bit sid and shuffled once by it: the aliased ends keep
+    // that partitioning, so neither id join reshuffles the wide payload
+    // (a checkpointed table cannot be column-pruned), and the real clip
+    // id rides along in the payload row.
     val shufN = sigs.sparkSession.sessionState.conf.numShufflePartitions
-    // payload keyed by the candidate stage's 64-bit sid: the joins below
-    // probe on longs, and each payload row carries the real clip_id, so
-    // the sid -> id decode comes for free with the join
-    val payload = sigs.select(sidOf(col("clip_id")).as("sid"), col("clip_id"),
-        col("transcript"), col("sh"), col("afp"))
+    val payload = sigs.select(sidOf(col("clip_id")).as("sid"), col("clip_id").as("id"),
+        col("transcript").as("text"), col("sh"), col("afp"))
       .repartition(shufN, col("sid"))
-    // no persist: both joins read one payload exchange, which AQE runs
-    // once and reuses (ReusedExchange, PlansSpec)
-    val withA = cands.join(payload.select(col("sid").as("a"), col("clip_id").as("id_a"),
-      col("transcript").as("text_a"), col("sh").as("sh_a"), col("afp").as("afp_a")), "a")
-    val withB = withA.join(payload.select(col("sid").as("b"), col("clip_id").as("id_b"),
-      col("transcript").as("text_b"), col("sh").as("sh_b"), col("afp").as("afp_b")), "b")
+    val bound = bindPairs(cands, payload, "sid")
     val inter = sorted_intersect_count(col("sh_a"), col("sh_b")).cast("double")
     // try_divide: ANSI-safe even if an upstream source hands us genuinely
     // empty shingle arrays (a null pair then scores null -> filtered out)
@@ -584,7 +582,7 @@ object Dedup {
     // is re-canonicalized to STRING id order — sid order is hash order,
     // not the stable contract downstream oracles pin
     val swap = col("id_a") > col("id_b")
-    withB
+    bound
       .withColumn("jaccard", jac)
       .withColumn("containment", cont)
       .withColumn("audio_jaccard", audioJac)

@@ -88,10 +88,8 @@ object Ann {
     // product
     val shufN = emb.sparkSession.sessionState.conf.numShufflePartitions
     val candIds = cosineNearDupCandidates(emb, depth, tables).repartition(shufN)
-    val va = emb.select(col("vec_id").as("a"), col("embedding").as("ea"))
-    val vb = emb.select(col("vec_id").as("b"), col("embedding").as("eb"))
-    candIds.join(va, "a").join(vb, "b")
-      .withColumn("cos", round(graft.functions.cosine_sim(col("ea"), col("eb")), 6))
+    graft.pipeline.Dedup.bindPairs(candIds, emb.select(col("vec_id"), col("embedding")), "vec_id")
+      .withColumn("cos", round(graft.functions.cosine_sim(col("embedding_a"), col("embedding_b")), 6))
       .where(col("cos") >= tau)
       .select(col("a"), col("b"), col("cos"))
   }

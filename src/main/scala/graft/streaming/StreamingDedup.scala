@@ -34,12 +34,10 @@ object StreamingDedup {
     * the static side: (clip_id, sh) as produced by shingle_hashes over
     * the reference corpus (at scale: the published signature table). */
   def verifiedTextPairs(clips: DataFrame, payload: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame = {
-    val cands = textCandidatePairs(clips, cfg)
-    val withA = cands.join(payload.select(col("clip_id").as("a"), col("sh").as("sh_a")), "a")
-    val withB = withA.join(payload.select(col("clip_id").as("b"), col("sh").as("sh_b")), "b")
     val inter = sorted_intersect_count(col("sh_a"), col("sh_b")).cast("double")
     val jac = try_divide(inter, size(col("sh_a")) + size(col("sh_b")) - inter)
-    withB.withColumn("jaccard", jac)
+    Dedup.bindPairs(textCandidatePairs(clips, cfg), payload.select(col("clip_id"), col("sh")), "clip_id")
+      .withColumn("jaccard", jac)
       .where(col("jaccard") >= cfg.tau)
       .select(col("a"), col("b"), col("jaccard"))
   }

@@ -86,16 +86,28 @@ class PlansSpec extends AnyFunSuite {
     assert(!p.contains("BroadcastNestedLoopJoin"), "unkeyed join found in candidate plan")
   }
 
-  test("verify shuffles the payload once for both id joins, with no persist") {
-    val cfg = graft.pipeline.DedupConfig()
-    val clips = graft.gen.ClipGen.generate(spark, 100, seed = 3L)._1.toDF()
-    val sigs = graft.pipeline.Dedup.materialize(graft.pipeline.Dedup.signatures(clips, cfg))
-    try {
-      val v = graft.pipeline.Dedup.verify(sigs, graft.pipeline.Dedup.candidates(sigs, cfg), cfg)
-      v.collect() // final adaptive plan: query stages and their reuse are decided here
-      val p = v.queryExecution.executedPlan.toString
+  // Every caller of Dedup.bindPairs binds its pair payload with no persist:
+  // both id joins read one payload exchange, the second as a reuse.
+  private val pairBinders: Seq[(String, () => String)] = Seq(
+    "verify" -> (() => {
+      val cfg = graft.pipeline.DedupConfig()
+      val clips = graft.gen.ClipGen.generate(spark, 100, seed = 3L)._1.toDF()
+      val sigs = graft.pipeline.Dedup.materialize(graft.pipeline.Dedup.signatures(clips, cfg))
+      try {
+        val v = graft.pipeline.Dedup.verify(sigs, graft.pipeline.Dedup.candidates(sigs, cfg), cfg)
+        v.collect() // final adaptive plan: query stages and their reuse are decided here
+        v.queryExecution.executedPlan.toString
+      } finally graft.pipeline.Dedup.release(sigs)
+    }),
+    "q_word_jaccard_pairs" -> (() => plan("q_word_jaccard_pairs")),
+    "q_minhash_lsh_docs" -> (() => plan("q_minhash_lsh_docs")),
+    "q_shared_spans" -> (() => plan("q_shared_spans")))
+
+  pairBinders.foreach { case (caller, finalPlan) =>
+    test(s"$caller shuffles the payload once for both id joins, with no persist") {
+      val p = finalPlan()
       assert(p.contains("ReusedExchange"), s"payload exchange not reused by the second join:\n$p")
-      assert(!p.contains("InMemoryTableScan"), s"verify reads a persisted frame:\n$p")
-    } finally graft.pipeline.Dedup.release(sigs)
+      assert(!p.contains("InMemoryTableScan"), s"$caller reads a persisted frame:\n$p")
+    }
   }
 }

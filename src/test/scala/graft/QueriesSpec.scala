@@ -21,6 +21,23 @@ class QueriesSpec extends AnyFunSuite {
     }
   }
 
+  test("pair-binding leaves leave nothing persisted but clipsInput's cache, call after call") {
+    // the session is shared with other tests: compare against its
+    // persisted set as this test finds it
+    val sc = spark.sparkContext
+    def persisted = sc.getPersistentRDDs.keySet
+    val before = persisted
+    SparkEntry.clipsInput(spark, sf).count() // the one intended per-dir cache
+    val clipsCache = persisted -- before
+    val leaves = Seq("q_word_jaccard_pairs", "q_minhash_lsh_docs", "q_cc_clusters",
+      "q_shared_spans", "q_embed_neardup", "q_pipeline_text_clusters",
+      "q_pipeline_substring_clusters", "q_pipeline_clusters")
+    for (_ <- 1 to 2; leaf <- leaves) q(leaf).collect()
+    val leaked = persisted -- before -- clipsCache
+    assert(leaked.isEmpty, s"persisted RDDs left behind: " +
+      leaked.toSeq.sorted.map(id => s"$id ${sc.getPersistentRDDs(id).name.take(300)}").mkString("\n"))
+  }
+
   test("every oracleSql key has a matching query") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracleSql without query: $missing")

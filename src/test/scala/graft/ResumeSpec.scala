@@ -26,14 +26,15 @@ class ResumeSpec extends AnyFunSuite {
 
   /** Runs `body` in its own job group and returns its result with the
     * stage names (call sites, e.g. "parquet at TableIO.scala:54") of
-    * every Spark job it started. */
-  private def jobsOf[T](body: => T): (T, Seq[String]) = {
+    * every Spark job it started that `keep` accepts. */
+  private def jobsOf[T](body: => T,
+      keep: SparkListenerJobStart => Boolean = _ => true): (T, Seq[String]) = {
     val sc = spark.sparkContext
     val group = s"resume-spec-${java.util.UUID.randomUUID()}"
     val stages = new ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group && keep(e))
           stages.add(e.stageInfos.map(_.name).mkString(" | "))
     }
     sc.addSparkListener(listener)
@@ -161,6 +162,27 @@ class ResumeSpec extends AnyFunSuite {
     val snap = new String(Files.readAllBytes(Paths.get(root, "_snapshots", "stage-k1.json")), "UTF-8")
     Seq("\"stage\"", "\"config_hash\"", "\"location\"", "\"rows\":2", "\"wall_ms\"", "\"schema\"")
       .foreach(f => assert(snap.contains(f), s"snapshot lacks $f: $snap"))
+  }
+
+  test("a commit reads its data back with the written schema: no inference job, same schema") {
+    val clips = ClipGen.generate(spark, nClips = 200, seed = 13L)._1.toDF().cache()
+    val root = freshRoot("readback")
+    // parquet schema inference is a bare RDD job started while a read is
+    // planned, outside any SQL execution; every other TableIO job (the
+    // writes, the per-partition counts) runs inside one
+    val (_, inferred) = jobsOf(Dedup.runCheckpointed(spark, clips, cfg, root).count(),
+      keep = e => e.properties.getProperty("spark.sql.execution.id") == null)
+    assert(!inferred.exists(_.contains("TableIO")), s"a commit inferred a schema: $inferred")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val snaps = Files.list(Paths.get(root, "_snapshots")).iterator().asScala.toSeq
+      .filter(_.getFileName.toString.endsWith(".json")) // not the checksum files
+    assert(snaps.size == 4, s"expected one snapshot per stage: $snaps")
+    snaps.foreach { f =>
+      val snap = json.readTree(f.toFile)
+      val schema = org.apache.spark.sql.types.DataType.fromJson(snap.get("schema").toString)
+      assert(schema == spark.read.parquet(snap.get("location").asText()).schema,
+        s"${f.getFileName}: snapshot schema differs from the inferred one")
+    }
   }
 
   test("a snapshot written without a schema field (older roots) still reads") {
