@@ -341,17 +341,7 @@ object SparkEntry {
     "q_ann_bruteforce" -> ((s, dir) => {
       // top-10 cosine neighbors of query vectors 0..2: brute force,
       // broadcast the tiny query side, score via codegen'd zip_with+aggregate
-      val emb = tbl(s, dir, "embeddings")
-      val queries = emb.where(col("vec_id") < 3)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val scored = emb.crossJoin(broadcast(queries))
-        .where(col("vec_id") =!= col("qid"))
-        .withColumn("cos", round(graft.functions.cosine_sim(col("embedding"), col("qv")), 6))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("qid")).orderBy(desc("cos"), col("vec_id"))
-      scored.withColumn("rk", row_number().over(w))
-        .where(col("rk") <= 10)
-        .select(col("qid"), col("vec_id"), col("cos"), col("rk"))
+      graft.sim.Ann.bruteTopK(tbl(s, dir, "embeddings"), kNeighbors = 10)
         .orderBy(col("qid"), col("rk"))
     }),
 
@@ -530,19 +520,17 @@ object SparkEntry {
       .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("w"))
       .where(col("w") =!= "")
     val cand = wordPrefixCandidates(words, tau)
-    // Verification payload: words mapped through a DENSE id dictionary, so
+    // Verification payload: words mapped through an id dictionary, so
     // the ~candidate-count array binds carry array<long> (8 B/word) instead
     // of strings and the codegen merge walk compares longs (measured ~1.6x
     // end-to-end vs string arrays at sf0.1 / 10.8M candidates). The mapping
     // is bijective — |a∩b|, na, nb and hence J are EXACT, no hash-collision
-    // caveat. Ids come from a hash-partitioned, within-partition-sorted
-    // zipWithIndex: fully distributed and deterministic, no single-task
-    // global sort even at web-scale vocabularies.
-    val sp = documents.sparkSession
-    import sp.implicits._
+    // caveat. monotonically_increasing_id numbers the distinct words with
+    // no global sort and no RDD round trip; sorting each partition first
+    // keeps the numbering the same if a task is recomputed.
     val vocab = words.select(col("w")).distinct()
-      .repartition(col("w")).sortWithinPartitions(col("w"))
-      .rdd.map(_.getString(0)).zipWithIndex().toDF("w", "wid")
+      .sortWithinPartitions(col("w"))
+      .withColumn("wid", monotonically_increasing_id())
     // ws is a sort_array output — the codegen merge walk replaces
     // array_intersect's per-row hash set
     val sets = words.join(vocab, "w")
@@ -552,7 +540,7 @@ object SparkEntry {
     // binds downstream, and AQE's bytes-based coalescing was running the
     // whole verification on a handful of tasks (same reasoning as the
     // pinned repartition in Dedup.sharedSpanPairs).
-    val shufN = sp.sessionState.conf.numShufflePartitions
+    val shufN = documents.sparkSession.sessionState.conf.numShufflePartitions
     val inter = sorted_intersect_count(col("ws_a"), col("ws_b")).cast("double")
     Dedup.bindPairs(cand.repartition(shufN), sets, "doc_id")
       .withColumn("j", round(inter / (size(col("ws_a")) + size(col("ws_b")) - inter), 6))

@@ -145,23 +145,13 @@ package object functions {
   val is_substring = udf((a: String, b: String) =>
     a != null && b != null && Text.isSubstring(a, b))
 
-  /** Longest shared contiguous span (in code points) via a per-pair
-    * generalized suffix array — the exact verifier of the north-rule
-    * substring pass (see text.SuffixArray). */
-  val shared_span_len = udf((a: String, b: String) =>
-    graft.text.SuffixArray.longestSharedSpan(a, b))
-
   // ---- text analysis --------------------------------------------------------
   val lang_id = udf((text: String) => if (text == null) "en" else Text.langId(text)._1)
-
-  val lang_id_conf = udf((text: String) => if (text == null) 0.0 else Text.langId(text)._2)
 
   val bpeish_token_count = udf((text: String) =>
     if (text == null) 0 else Text.bpeIshTokenCount(text))
 
   val rolling_fp = udf((text: String) => if (text == null) 0L else Text.rollingFingerprint(text))
-
-  val quality_struct = udf((text: String) => Text.quality(if (text == null) "" else text))
 
   // ---- audio -----------------------------------------------------------------
   val audio_fp_hashes = udf((bytes: Array[Byte], codec: String, srHz: Int) =>

@@ -97,8 +97,7 @@ object Dedup {
       minhash_text(t, cfg.shingleK, cfg.numPerms).as("minhash"),
       simhash_text(t).as("simhash"),
       afpCol.as("afp"),
-      winnow_hashes(t, lit(cfg.winnowK), lit(cfg.winnowWindow)).as("winnow"),
-      length(t).as("t_len"))
+      winnow_hashes(t, lit(cfg.winnowK), lit(cfg.winnowWindow)).as("winnow"))
       .withColumn("audio_minhash", minhash_of_hashes(col("afp"), lit(cfg.numPerms)))
   }
 
@@ -130,12 +129,19 @@ object Dedup {
       // trip per CC iteration is pure serial latency for kilobyte state.
       df.localCheckpoint(true, localLevel)
 
-  /** Frees the blocks behind a `materialize`d frame once nothing left to
-    * run reads it. `Dataset.unpersist` cannot: it only reaches the cache
-    * manager, while a local checkpoint persists its RDD directly. A
-    * reliable checkpoint holds no blocks, so this is a no-op there. */
+  /** Frees what backs a `materialize`d frame once nothing left to run
+    * reads it: the blocks of a local checkpoint, or the files of a
+    * reliable one. `Dataset.unpersist` reaches neither: it only reaches
+    * the cache manager, while a local checkpoint persists its RDD
+    * directly and a reliable one writes under the checkpoint dir, which
+    * Spark does not clean by default. */
   private[graft] def release(df: DataFrame): Unit = df.queryExecution.logical match {
-    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+    case r: org.apache.spark.sql.execution.LogicalRDD =>
+      r.rdd.unpersist(blocking = false)
+      r.rdd.getCheckpointFile.foreach { f =>
+        val path = new org.apache.hadoop.fs.Path(f)
+        path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration).delete(path, true)
+      }
     case _ =>
   }
 

@@ -172,39 +172,6 @@ object Text {
     h
   }
 
-  // --- Quality scoring -----------------------------------------------------
-  final case class Quality(
-      nChars: Int, nTokens: Int, meanTokenLen: Double,
-      alphaRatio: Double, punctRatio: Double, stopwordRatio: Double,
-      score: Double)
-
-  private val Stopwords: Set[String] = Set(
-    "the", "a", "an", "and", "or", "of", "to", "in", "is", "it", "that",
-    "for", "on", "with", "as", "was", "at", "by", "be", "this")
-
-  def quality(text: String): Quality = {
-    val ts = tokens(text)
-    val nChars = text.length
-    val nTok = ts.length
-    val meanLen = if (nTok == 0) 0.0 else ts.map(_.length).sum.toDouble / nTok
-    var alpha = 0; var punct = 0
-    var i = 0
-    while (i < text.length) {
-      val c = text.charAt(i)
-      if (Character.isLetter(c)) alpha += 1
-      else if (!Character.isWhitespace(c) && !Character.isDigit(c)) punct += 1
-      i += 1
-    }
-    val alphaR = if (nChars == 0) 0.0 else alpha.toDouble / nChars
-    val punctR = if (nChars == 0) 0.0 else punct.toDouble / nChars
-    val stopR = if (nTok == 0) 0.0 else ts.count(t => Stopwords.contains(t.toLowerCase)).toDouble / nTok
-    // Gopher-style composite: favor mid-length alphabetic text with some
-    // stopwords, penalize punctuation soup.
-    val lenOk = if (nTok >= 5 && nTok <= 10000) 1.0 else 0.0
-    val score = lenOk * (0.5 * alphaR + 0.3 * math.min(stopR * 4, 1.0) + 0.2 * (1.0 - math.min(punctR * 5, 1.0)))
-    Quality(nChars, nTok, meanLen, alphaR, punctR, stopR, score)
-  }
-
   // --- Language identification --------------------------------------------
   // Tiny stopword/character-class profile model (public langid heuristics).
   private val LangMarkers: Seq[(String, Set[String])] = Seq(

@@ -7,6 +7,7 @@ import graft.pipeline.{Dedup, DedupConfig}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** E2E pipeline vs exact oracle (SURVEY §5 E2E level + §7.4 minimum slice):
   * recall >= 0.99 against exact-Jaccard/containment/audio-overlap truth,
@@ -189,28 +190,50 @@ class DedupPipelineSpec extends AnyFunSuite {
       s"diff=${(got.toSet -- want.toSet).take(5)} / ${(want.toSet -- got.toSet).take(5)}")
   }
 
+  /** Two `Dedup.run(...).count()` calls over 300 cached clips with the
+    * session's checkpoint dir set to `ckpt`; after each, `leftover` (given
+    * what `snapshot` saw before the first run) must be empty. */
+  private def runsLeaveNothing[S](ckpt: Option[String])(snapshot: => S)(
+      leftover: S => Iterable[String]): Unit = {
+    val sc = spark.sparkContext
+    val bridge = org.apache.spark.graft.CheckpointDirBridge
+    val saved = bridge.get(sc)
+    bridge.set(sc, ckpt)
+    val small = ClipGen.generate(spark, nClips = 300, seed = 7L, numPartitions = 4)._1.toDF().cache()
+    try {
+      val n = small.count()
+      val before = snapshot
+      for (i <- 1 to 2) {
+        assert(Dedup.run(spark, small, cfg).count() == n)
+        val left = leftover(before)
+        assert(left.isEmpty, s"left behind by run $i")
+      }
+    } finally {
+      small.unpersist()
+      bridge.set(sc, saved)
+    }
+  }
+
   test("Dedup.run releases the blocks it persists (no checkpoint dir)") {
     // local checkpoints persist their RDD directly, out of reach of
     // Dataset.unpersist, so the run must release its signature and edge
     // barriers itself. Compared by RDD id, since the context tracks
     // persisted RDDs through weak references.
     val sc = spark.sparkContext
-    val bridge = org.apache.spark.graft.CheckpointDirBridge
-    val dir = bridge.get(sc)
-    bridge.set(sc, None)
-    val small = ClipGen.generate(spark, nClips = 300, seed = 7L, numPartitions = 4)._1.toDF().cache()
-    try {
-      val n = small.count()
-      val before = sc.getPersistentRDDs.keySet
-      for (i <- 1 to 2) {
-        assert(Dedup.run(spark, small, cfg).count() == n)
-        val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
-        assert(left.isEmpty, s"run $i left persisted: ${left.values.mkString("; ")}")
-      }
-    } finally {
-      small.unpersist()
-      bridge.set(sc, dir)
-    }
+    runsLeaveNothing(None)(sc.getPersistentRDDs.keySet)(before =>
+      sc.getPersistentRDDs.collect { case (id, rdd) if !before(id) => rdd.toString })
+  }
+
+  test("Dedup.run deletes its reliable checkpoint files (checkpoint dir set)") {
+    // Spark leaves reliable checkpoint files on disk unless told to clean
+    // them, so the run must delete its signature and edge barriers (and
+    // CC's superseded rounds) itself
+    val dir = java.nio.file.Files.createTempDirectory("graft-run-ckpt")
+    def files = java.nio.file.Files.walk(dir).iterator().asScala
+      .filter(java.nio.file.Files.isRegularFile(_)).map(_.toString).toList
+    try runsLeaveNothing(Some(dir.toString))(())(_ => files)
+    finally java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
+      .forEach(f => java.nio.file.Files.delete(f))
   }
 
   test("clusters are partition-invariant (1 vs 7 partitions)") {

@@ -188,6 +188,42 @@ class QueriesSpec extends AnyFunSuite {
     assert(recall >= 0.9, s"ann ivf recall too low: $recall")
   }
 
+  test("ann ivf on a 4-partition input: one training pass, recall, repeatable rows") {
+    // a multi-partition table trains like a one-file table: one sample
+    // collect and a driver Lloyd loop, not a distributed aggregation job
+    // per iteration
+    val dir = "/root/testdata/sf0.01"
+    val emb = spark.read.parquet(s"$dir/embeddings.parquet").repartition(4)
+    val sc = spark.sparkContext
+    val group = s"queries-spec-ivf-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet(): Unit
+    }
+    def ivfCall(): (Set[(Long, Long, Double, Int)], Int) = {
+      jobs.set(0)
+      val rows = graft.sim.Ann.ivfTopK(spark, emb, kNeighbors = 10, nCentroids = 8, nProbe = 6)
+        .as[(Long, Long, Double, Int)].collect().toSet
+      org.apache.spark.graft.ListenerBusBridge.drain(sc)
+      (rows, jobs.get())
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "QueriesSpec ivf")
+    val ((first, jobs1), (second, jobs2)) =
+      try (ivfCall(), ivfCall())
+      finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    info(s"ivf jobs per call: $jobs1, $jobs2")
+    assert(jobs1 <= 12 && jobs2 <= 12, s"ivfTopK started $jobs1 / $jobs2 jobs")
+    assert(first == second, s"calls differ: ${(first -- second).take(3)} / ${(second -- first).take(3)}")
+    val brute = SparkEntry.queries("q_ann_bruteforce")(spark, dir)
+      .select($"qid", $"vec_id").as[(Long, Long)].collect().toSet
+    val recall = brute.intersect(first.map(r => (r._1, r._2))).size.toDouble / brute.size
+    info(s"ivf recall at 4 partitions=$recall")
+    assert(recall >= 0.9, s"ann ivf recall too low at 4 partitions: $recall")
+  }
+
   test("ann ivf rejects empty input and mixed dimensions with a clear error") {
     val empty = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
     val e1 = intercept[IllegalArgumentException](graft.sim.Ann.ivfTopK(spark, empty, kNeighbors = 3))

@@ -38,14 +38,6 @@ class TextAudioSpec extends AnyFunSuite {
     assert(Text.langId("")._1 == "en") // default
   }
 
-  test("quality: sane ranges and degenerate inputs") {
-    val good = Text.quality("the quick brown fox jumps over the lazy dog near the river bank today")
-    assert(good.score > 0.5 && good.alphaRatio > 0.7 && good.stopwordRatio > 0.1)
-    val junk = Text.quality("!!! ??? *** $$$ %%% ^^^ &&& !!! ??? ***")
-    assert(junk.score < 0.2, s"junk score ${junk.score}")
-    assert(Text.quality("").score == 0.0)
-  }
-
   test("token counting: whitespace and bpe-ish") {
     assert(Text.tokens("a  b   c").toSeq == Seq("a", "b", "c"))
     assert(Text.bpeIshTokenCount("hello, world! x2") == 6) // hello , world ! x 2
