@@ -251,17 +251,14 @@ object SparkEntry {
       // the component; unmatched docs are singleton clusters. At this size
       // runOnStrings closes the pairs with its driver union-find (its
       // star rounds take over only past DefaultLocalEdgeThreshold edges).
-      // Ids are zero-padded before CC so its string-min representative is
-      // the numeric min.
-      val pairs = lshVerifiedDocPairs(s, dir).select(
-        lpad(col("a").cast("string"), 12, "0").as("a"),
-        lpad(col("b").cast("string"), 12, "0").as("b"))
-      val cc = graft.pipeline.ConnectedComponents.runOnStrings(s, pairs, "a", "b")
+      // Ids are zero-padded for Dedup.clusters (the pipeline's cluster
+      // join) so its string-min representative is the numeric min.
+      def padded(c: String) = lpad(col(c).cast("string"), 12, "0")
+      val pairs = lshVerifiedDocPairs(s, dir).select(padded("a").as("a"), padded("b").as("b"))
+      val docs = tbl(s, dir, "documents").select(padded("doc_id").as("clip_id"))
+      Dedup.clusters(s, docs, pairs)
         .select(col("clip_id").cast("long").as("doc_id"),
-          col("cluster_id").cast("long").as("cid"))
-      tbl(s, dir, "documents").select(col("doc_id"))
-        .join(cc, Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("cid"), col("doc_id")).as("cluster_id"))
+          col("cluster_id").cast("long").as("cluster_id"))
         .orderBy(col("doc_id"))
     }),
 
@@ -410,12 +407,13 @@ object SparkEntry {
 
     "q_pipeline_text_clusters" -> ((s, dir) => {
       // the flagship path END TO END — signatures -> LSH band buckets ->
-      // salted pair generation -> exact verify -> large-star/small-star CC
-      // -> cluster ids — restricted to minhash evidence with Jaccard-only
-      // verification. Every stage is the one q_pipeline_clusters runs, but
-      // the decision predicate (shingle J >= tau) is SQL-expressible, so
-      // DuckDB replays candidates+verify+clustering exactly (at b=32/r=4
-      // an LSH miss of a J>=0.8 pair has p ~ 5e-8: zero expected misses).
+      // salted pair generation -> exact verify -> CC (at this size the
+      // driver union-find) -> cluster ids — restricted to minhash evidence
+      // with Jaccard-only verification. Every stage is the one
+      // q_pipeline_clusters runs, but the decision predicate (shingle J >=
+      // tau) is SQL-expressible, so DuckDB replays
+      // candidates+verify+clustering exactly (at b=32/r=4 an LSH miss of a
+      // J>=0.8 pair has p ~ 5e-8: zero expected misses).
       val cfg = DedupConfig(sources = Set("minhash"), verifyContainment = false)
       Dedup.run(s, clipsInput(s, dir), cfg).orderBy(col("clip_id"))
     }),
@@ -425,22 +423,19 @@ object SparkEntry {
       // the driver gate: exact shared-span pairs (>= 47 code points —
       // winnowing recall guarantee + per-pair generalized-SA exact
       // verification, Dedup.sharedSpanPairs) closed into clusters by
-      // large-star/small-star CC. SQL-replayable because "longest shared
-      // span >= 47" is EXACTLY "shares some 47-char gram": DuckDB
-      // rebuilds the pair set from a 47-gram self-join and closes it
-      // with a recursive CTE. (Scope: ASCII transcripts — ClipGen emits
-      // [a-z ] only, so char grams and byte grams coincide.)
+      // Dedup.clusters (at this size CC's driver union-find).
+      // SQL-replayable because "longest shared span >= 47" is EXACTLY
+      // "shares some 47-char gram": DuckDB rebuilds the pair set from a
+      // 47-gram self-join and closes it with a recursive CTE. (Scope:
+      // ASCII transcripts — ClipGen emits [a-z ] only, so char grams and
+      // byte grams coincide.)
       val clips = clipsInput(s, dir).select(col("clip_id"), col("transcript"))
       // flags-only span operator (only the pair ids feed CC): skips the
       // per-pair SA build — the dominant per-pair cost here, where most
       // candidates genuinely qualify (planted duplicates + hot sentence)
       val pairs = Dedup.sharedSpanFlagPairs(clips, "clip_id", "transcript",
         DedupConfig(), minSpan = 47).select(col("a"), col("b"))
-      val cc = graft.pipeline.ConnectedComponents.runOnStrings(s, pairs, "a", "b")
-      clips.select(col("clip_id"))
-        .join(cc, Seq("clip_id"), "left")
-        .select(col("clip_id"), coalesce(col("cluster_id"), col("clip_id")).as("cluster_id"))
-        .orderBy(col("clip_id"))
+      Dedup.clusters(s, clips, pairs).orderBy(col("clip_id"))
     }),
 
     "q_multimodal_meta" -> ((s, dir) => {

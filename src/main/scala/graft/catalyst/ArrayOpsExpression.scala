@@ -3,7 +3,7 @@ package graft.catalyst
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
 /** |A ∩ B| for two SORTED, distinct array<long> columns, as a single
   * merge walk inside whole-stage codegen.
@@ -30,35 +30,22 @@ case class SortedIntersectCountExpr(left: Expression, right: Expression)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "graft_sorted_intersect_count"
 
-  // long arrays (shingle/frame hashes) and string arrays (sorted word
-  // sets — Spark's sort_array string order IS UTF8String binary order,
-  // the same order the string merge walk compares in)
-  private lazy val isString: Boolean =
-    left.dataType.asInstanceOf[ArrayType].elementType == StringType
-
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) |
-           (ArrayType(StringType, _), ArrayType(StringType, _)) =>
+      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case _ =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires two array<long> or two array<string> inputs, " +
+          s"$prettyName requires two array<long> inputs, " +
             s"got ${left.dataType.sql} / ${right.dataType.sql}")
     }
   }
 
   override protected def nullSafeEval(a: Any, b: Any): Any =
-    if (isString)
-      SortedIntersectCountExpr.computeString(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    else
-      SortedIntersectCountExpr.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    SortedIntersectCountExpr.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = if (isString) "computeString" else "compute"
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.catalyst.SortedIntersectCountExpr.$m($a, $b)")
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.catalyst.SortedIntersectCountExpr.compute($a, $b)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SortedIntersectCountExpr =
@@ -78,23 +65,6 @@ object SortedIntersectCountExpr {
       val y = b.getLong(j)
       if (x < y) i += 1
       else if (x > y) j += 1
-      else { n += 1; i += 1; j += 1 }
-    }
-    n
-  }
-
-  /** String variant (sorted word sets): UTF8String binary compare, the
-    * exact order sort_array produces for array<string>. */
-  def computeString(a: ArrayData, b: ArrayData): Int = {
-    val na = a.numElements()
-    val nb = b.numElements()
-    var i = 0
-    var j = 0
-    var n = 0
-    while (i < na && j < nb) {
-      val c = a.getUTF8String(i).compareTo(b.getUTF8String(j))
-      if (c < 0) i += 1
-      else if (c > 0) j += 1
       else { n += 1; i += 1; j += 1 }
     }
     n

@@ -179,8 +179,10 @@ object ConnectedComponents {
     * most `localEdgeThreshold` of them are collected and closed by a
     * driver union-find, more run `run`'s distributed rounds directly on
     * the string ids. Both give the same labels (CcSpec runs both). The
-    * threshold is a parameter only so tests can force the distributed
-    * branch with 0. */
+    * persist + count is the only barrier `Dedup.run` puts on its verified
+    * edges, so a lazy `edges` plan (verification included) runs once,
+    * here. The threshold is a parameter only so tests can force the
+    * distributed branch with 0. */
   def runOnStrings(spark: SparkSession, edges: DataFrame, aCol: String, bCol: String,
       localEdgeThreshold: Long = DefaultLocalEdgeThreshold): DataFrame = {
     import spark.implicits._

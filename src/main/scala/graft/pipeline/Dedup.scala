@@ -124,9 +124,9 @@ object Dedup {
       // ~10 GB serialized at 600k clips, and keeping it heap-resident
       // (MEMORY_AND_DISK_SER) drove ParallelGC into multi-second full
       // collections that inflated the high-core leg superlinearly; local
-      // SSD blocks cost a re-read but zero GC. Small frames (CC rounds,
-      // verified edges) pass MEMORY_AND_DISK_SER instead — a disk round
-      // trip per CC iteration is pure serial latency for kilobyte state.
+      // SSD blocks cost a re-read but zero GC. Small frames (CC rounds)
+      // pass MEMORY_AND_DISK_SER instead — a disk round trip per CC
+      // iteration is pure serial latency for kilobyte state.
       df.localCheckpoint(true, localLevel)
 
   /** Frees what backs a `materialize`d frame once nothing left to run
@@ -604,7 +604,7 @@ object Dedup {
   }
 
   /** Stage 4: clusters from verified edges (ConnectedComponents.runOnStrings,
-    * which persists and counts them once).
+    * whose persist + count is the edges' only barrier in `run`).
     * cluster_id = min clip_id in the cluster (canonical; SURVEY §5).
     * Unmatched clips keep themselves as singleton clusters. */
   def clusters(spark: SparkSession, clips: DataFrame, edges: DataFrame): DataFrame = {
@@ -626,9 +626,11 @@ object Dedup {
     *  - signatures: the map pass (decode + minhash/simhash/winnow/afp);
     *  - pairs_verify: the bucket fan-out shuffle, single-pass pair run,
     *    bitmask dedup, the verify payload shuffle, both payload joins
-    *    and exact verification — one lazy chain, executed at the edge
-    *    materialization;
-    *  - cc_clusters: connected components + the final cluster join/count.
+    *    and exact verification — one lazy chain, executed when CC
+    *    persists and counts the edges — plus CC itself (the collect and
+    *    driver union-find, or past DefaultLocalEdgeThreshold edges the
+    *    star rounds);
+    *  - cc_clusters: the final cluster join + count.
     * This is the per-stage scaling diagnosis the bench emits at both
     * parallelism levels (which stage binds the N -> 4N efficiency). */
   def runTimedCount(spark: SparkSession, clips: DataFrame,
@@ -646,7 +648,9 @@ object Dedup {
   }
 
   /** The one stage sequence behind run() and runTimedCount(): `mark` is
-    * called with the stage name right after each eager barrier. */
+    * called with the stage name right after each eager barrier. The only
+    * barriers are the signature `materialize` (two consumers: candidates
+    * and verify) and CC's persist + count of the verified edges. */
   private def stages(spark: SparkSession, clips: DataFrame, cfg: DedupConfig,
       mark: String => Unit): DataFrame = {
     // candidates and verify both consume sigs: materialize so the
@@ -655,15 +659,14 @@ object Dedup {
     // §3.4: explicit materialization barrier = the --raw/--merge seam).
     val sigs = materialize(signatures(clips, cfg))
     mark("signatures")
-    // the edge barrier is where verification runs and pairs_verify ends;
-    // edge lists are small (pairs that SURVIVED exact verification)
-    val edges = materialize(verify(sigs, candidates(sigs, cfg), cfg).select(col("a"), col("b")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    // the verified edges have one consumer, CC, whose persist + count is
+    // their only barrier: verification runs there and pairs_verify ends
+    // once CC has closed them
+    val out = clusters(spark, clips,
+      verify(sigs, candidates(sigs, cfg), cfg).select(col("a"), col("b")))
     mark("pairs_verify")
-    val out = clusters(spark, clips, edges)
-    // CC is eager and its output reads neither barrier
+    // CC is eager and its output does not read the signatures
     release(sigs)
-    release(edges)
     out
   }
 

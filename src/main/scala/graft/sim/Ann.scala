@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * pairs, and table count / plane count trade recall for cost.
   *
   * Scale hygiene: ONE signature-UDF invocation per row emits the buckets
-  * for ALL tables (hyperplane signs precomputed once on the driver, not
+  * for ALL tables (hyperplane signs precomputed once per JVM, not
   * re-derived per row), candidate dedup happens on bare (qid, vec_id)
   * ids BEFORE payloads are re-attached, and only the deduped candidate
   * ids carry embedding vectors through a join.
@@ -29,7 +29,7 @@ object Ann {
   }
 
   /** Signs for all tables/planes over `dim` dims, laid out flat as
-    * [table][plane][dim] — computed once, captured by the signature UDF. */
+    * [table][plane][dim] — computed once per JVM and shape (signsFor). */
   private def signMatrix(tables: Int, planes: Int, dim: Int): Array[Float] = {
     val m = new Array[Float](tables * planes * dim)
     var t = 0
@@ -47,6 +47,15 @@ object Ann {
     }
     m
   }
+
+  private val signMemo =
+    new java.util.concurrent.ConcurrentHashMap[(Int, Int, Int), Array[Float]]()
+
+  /** The sign matrix for a vector of length `dim`, memoized per JVM: the
+    * signature UDF looks it up by each vector's own length, so no job
+    * probes the embedding dimension before bucketing. */
+  private def signsFor(tables: Int, planes: Int, dim: Int): Array[Float] =
+    signMemo.computeIfAbsent((tables, planes, dim), _ => signMatrix(tables, planes, dim))
 
   /** Signature depth that keeps the candidate join linear in corpus size:
     * an unrelated pair collides in some table with p ~ tables*(planes+1)
@@ -276,12 +285,11 @@ object Ann {
 
   /** (vec_id, t, bucket) — one signature bucket per (row, table). */
   private def bucketsOf(emb: DataFrame, planes: Int, tables: Int): DataFrame = {
-    val dim = emb.select(size(col("embedding"))).head().getInt(0)
-    val signs = signMatrix(tables, planes, dim)
     val nPlanes = planes
     val nTables = tables
     val allSigs = udf { (v: Seq[Float]) =>
       val a = v.toArray
+      val signs = signsFor(nTables, nPlanes, a.length)
       val out = new Array[Int](nTables)
       var t = 0
       while (t < nTables) {
@@ -312,7 +320,7 @@ object Ann {
   def lshTopK(spark: SparkSession, emb: DataFrame, kNeighbors: Int, planes: Int, tables: Int): DataFrame = {
     // one UDF call per row -> bucket for every table (16x fewer invocations
     // and boxed-Seq traversals than a per-(row,table) UDF); the sign matrix
-    // is built once on the driver and shipped in the UDF closure
+    // is built once per JVM (signsFor)
     val bucketed = bucketsOf(emb, planes, tables)
     // multiprobe on the QUERY side only: besides its own bucket, each query
     // probes every Hamming-1 neighbor bucket (flip one plane bit). This

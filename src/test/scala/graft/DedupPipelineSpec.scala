@@ -190,35 +190,46 @@ class DedupPipelineSpec extends AnyFunSuite {
       s"diff=${(got.toSet -- want.toSet).take(5)} / ${(want.toSet -- got.toSet).take(5)}")
   }
 
-  /** Two `Dedup.run(...).count()` calls over 300 cached clips with the
-    * session's checkpoint dir set to `ckpt`; after each, `leftover` (given
-    * what `snapshot` saw before the first run) must be empty. */
-  private def runsLeaveNothing[S](ckpt: Option[String])(snapshot: => S)(
-      leftover: S => Iterable[String]): Unit = {
+  /** `body` over 300 cached clips and their count, with the session's
+    * checkpoint dir set to `ckpt`; both are restored afterwards. */
+  private def withSmallClips[A](ckpt: Option[String])(body: (DataFrame, Long) => A): A = {
     val sc = spark.sparkContext
     val bridge = org.apache.spark.graft.CheckpointDirBridge
     val saved = bridge.get(sc)
     bridge.set(sc, ckpt)
     val small = ClipGen.generate(spark, nClips = 300, seed = 7L, numPartitions = 4)._1.toDF().cache()
-    try {
-      val n = small.count()
-      val before = snapshot
-      for (i <- 1 to 2) {
-        assert(Dedup.run(spark, small, cfg).count() == n)
-        val left = leftover(before)
-        assert(left.isEmpty, s"left behind by run $i")
-      }
-    } finally {
+    try body(small, small.count())
+    finally {
       small.unpersist()
       bridge.set(sc, saved)
     }
   }
 
+  private def withTempDir[A](prefix: String)(body: java.nio.file.Path => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir)
+    finally java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
+      .forEach(f => java.nio.file.Files.delete(f))
+  }
+
+  /** Two `Dedup.run(...).count()` calls over the small clips; after each,
+    * `leftover` (given what `snapshot` saw before the first run) must be
+    * empty. */
+  private def runsLeaveNothing[S](ckpt: Option[String])(snapshot: => S)(
+      leftover: S => Iterable[String]): Unit = withSmallClips(ckpt) { (small, n) =>
+    val before = snapshot
+    for (i <- 1 to 2) {
+      assert(Dedup.run(spark, small, cfg).count() == n)
+      val left = leftover(before)
+      assert(left.isEmpty, s"left behind by run $i")
+    }
+  }
+
   test("Dedup.run releases the blocks it persists (no checkpoint dir)") {
     // local checkpoints persist their RDD directly, out of reach of
-    // Dataset.unpersist, so the run must release its signature and edge
-    // barriers itself. Compared by RDD id, since the context tracks
-    // persisted RDDs through weak references.
+    // Dataset.unpersist, so the run must release its signature barrier
+    // itself. Compared by RDD id, since the context tracks persisted RDDs
+    // through weak references.
     val sc = spark.sparkContext
     runsLeaveNothing(None)(sc.getPersistentRDDs.keySet)(before =>
       sc.getPersistentRDDs.collect { case (id, rdd) if !before(id) => rdd.toString })
@@ -226,14 +237,49 @@ class DedupPipelineSpec extends AnyFunSuite {
 
   test("Dedup.run deletes its reliable checkpoint files (checkpoint dir set)") {
     // Spark leaves reliable checkpoint files on disk unless told to clean
-    // them, so the run must delete its signature and edge barriers (and
-    // CC's superseded rounds) itself
-    val dir = java.nio.file.Files.createTempDirectory("graft-run-ckpt")
-    def files = java.nio.file.Files.walk(dir).iterator().asScala
-      .filter(java.nio.file.Files.isRegularFile(_)).map(_.toString).toList
-    try runsLeaveNothing(Some(dir.toString))(())(_ => files)
-    finally java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-      .forEach(f => java.nio.file.Files.delete(f))
+    // them, so the run must delete its signature barrier (and CC's
+    // superseded rounds) itself
+    withTempDir("graft-run-ckpt") { dir =>
+      def files = java.nio.file.Files.walk(dir).iterator().asScala
+        .filter(java.nio.file.Files.isRegularFile(_)).map(_.toString).toList
+      runsLeaveNothing(Some(dir.toString))(())(_ => files)
+    }
+  }
+
+  /** Ids of the RDDs that get blocks stored during one
+    * `Dedup.run(...).count()` over the small clips. */
+  private def rddsStoredByOneRun(ckpt: Option[String]): Set[Int] = withSmallClips(ckpt) { (small, n) =>
+    import org.apache.spark.graft.ListenerBusBridge
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated}
+    val sc = spark.sparkContext
+    val stored = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit =
+        e.blockUpdatedInfo.blockId match {
+          case org.apache.spark.storage.RDDBlockId(id, _)
+              if e.blockUpdatedInfo.storageLevel.isValid => stored.add(id): Unit
+          case _ =>
+        }
+    }
+    ListenerBusBridge.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      assert(Dedup.run(spark, small, cfg).count() == n)
+      ListenerBusBridge.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    stored.asScala.toSet
+  }
+
+  test("Dedup.run holds the verified edges once: at most 2 RDDs store blocks") {
+    // the signature barrier and CC's persist of the edges; a second edge
+    // barrier in front of CC would be a third
+    val stored = withTempDir("graft-run-blocks") { dir =>
+      Seq(None, Some(dir.toString)).map(ckpt => ckpt.isDefined -> rddsStoredByOneRun(ckpt))
+    }
+    stored.foreach { case (withDir, ids) =>
+      info(s"checkpoint dir $withDir: blocks stored for RDDs ${ids.toSeq.sorted}")
+    }
+    assert(stored.forall(_._2.size <= 2), s"RDDs that stored blocks: $stored")
   }
 
   test("clusters are partition-invariant (1 vs 7 partitions)") {

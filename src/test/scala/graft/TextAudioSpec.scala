@@ -152,22 +152,4 @@ class TextAudioSpec extends AnyFunSuite {
       assert(got == a.toSet.intersect(b.toSet).size)
     }
   }
-
-  test("string merge-walk count == set intersection (UTF8String binary order)") {
-    import org.apache.spark.unsafe.types.UTF8String
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    val rng = new scala.util.Random(7)
-    def randWords(n: Int) =
-      Array.fill(n)(rng.alphanumeric.take(1 + rng.nextInt(6)).mkString)
-        .distinct.sortWith((x, y) => // binary order, like sort_array
-          UTF8String.fromString(x).compareTo(UTF8String.fromString(y)) < 0)
-    (0 until 50).foreach { _ =>
-      val a = randWords(rng.nextInt(60))
-      val b = randWords(rng.nextInt(60))
-      val got = graft.catalyst.SortedIntersectCountExpr.computeString(
-        new GenericArrayData(a.map(UTF8String.fromString): Array[Any]),
-        new GenericArrayData(b.map(UTF8String.fromString): Array[Any]))
-      assert(got == a.toSet.intersect(b.toSet).size)
-    }
-  }
 }
