@@ -89,15 +89,36 @@ object Cli {
     out.collect().map(_.getString(0)).toSeq
   }
 
-  private def parseFlags(args: Seq[String]): Map[String, String] =
-    args.grouped(2).collect {
-      case Seq(k, v) if k.startsWith("--") => k.drop(2) -> v
+  private val dedupFlags = Set("input", "output", "checkpoint", "tau", "bands", "rows", "shingle-k")
+
+  /** Each command's flag names; every flag takes a value. */
+  private[graft] val commandFlags: Map[String, Set[String]] = Map(
+    "ingest" -> Set("out", "n", "seed"),
+    "dedup" -> dedupFlags,
+    "resume" -> dedupFlags,
+    "sketch" -> Set("input", "key", "raw", "merge", "hh"))
+
+  /** `--name value` pairs of `known` names. An unknown name, a flag with
+    * no value or a bare switch fails instead of being dropped: a mistyped
+    * `--band 16` must not run with the default band count. */
+  private[graft] def parseFlags(args: Seq[String], known: Set[String]): Map[String, String] =
+    args.grouped(2).map { kv =>
+      val name = kv.head.stripPrefix("--")
+      require(kv.head.startsWith("--") && known(name), s"unknown flag ${kv.head}; " +
+        s"expected one of ${known.toSeq.sorted.map("--" + _).mkString(" ")}")
+      require(kv.length == 2 && !kv(1).startsWith("--"), s"flag ${kv.head} needs a value")
+      name -> kv(1)
     }.toMap
 
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) { usage(); sys.exit(2) }
     val cmd = args.head
-    val flags = parseFlags(args.toSeq.tail)
+    val flags = commandFlags.get(cmd) match {
+      case None => System.err.println(s"unknown command: $cmd"); usage(); sys.exit(2)
+      case Some(known) =>
+        try parseFlags(args.toSeq.tail, known)
+        catch { case e: IllegalArgumentException => System.err.println(e.getMessage); usage(); sys.exit(2) }
+    }
     val spark = SparkSession.builder()
       .appName(s"graft-$cmd")
       .config("spark.sql.session.timeZone", "UTC")
@@ -145,9 +166,6 @@ object Cli {
           merge = flags.get("merge").exists(_.toBoolean),
           hh = flags.get("hh").map(_.toInt))
           .foreach(println)
-
-      case other =>
-        System.err.println(s"unknown command: $other"); usage(); sys.exit(2)
     } finally spark.stop()
   }
 

@@ -28,7 +28,6 @@ object GraftFunctions {
     r.register("minhash_text", functions.minhash_text_udf)
     r.register("band_hashes", functions.band_hashes)
     r.register("simhash_text", functions.simhash_text)
-    r.register("simhash_buckets", functions.simhash_buckets)
     r.register("hamming", functions.hamming)
     r.register("exact_jaccard", functions.exact_jaccard)
     r.register("exact_containment", functions.exact_containment)

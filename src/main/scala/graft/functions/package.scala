@@ -129,8 +129,6 @@ package object functions {
       SimHasher.simhash(hs)
     })
 
-  val simhash_buckets = udf((sim: Long, chunks: Int) => SimHasher.bucketKeys(sim, chunks))
-
   val simhash_combo_buckets = udf((sim: Long) => SimHasher.comboBucketKeys(sim))
 
   val hamming = udf((a: Long, b: Long) => SimHasher.hammingDistance(a, b))

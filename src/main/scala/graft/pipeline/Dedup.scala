@@ -169,45 +169,35 @@ object Dedup {
     element_at(array(SourceNames.map(lit): _*), c.cast("int") + 1)
   private[graft] def sidOf(c: Column): Column = xxhash64(c)
 
-  /** Candidate pairs from a (sid, bucket, source) fan-out. ONE exchange
-    * (repartition on (source, bucket)), one in-partition sort, one
-    * streaming pass — output (a, b, source) sid pairs, a < b.
+  /** Candidate pairs from a (sid, bucket, source) fan-out: (a, b, source)
+    * sid pairs, a < b, from one exchange on (source, bucket), one
+    * in-partition sort and one pass over the sorted rows.
     *
-    * Each (source, bucket) run arrives as one consecutive sorted slice,
-    * ordered INSIDE the run by a per-bucket salted hash of the member.
-    * The pass walks it with O(hotBucketLimit) memory and emits, per run:
-    *  - runs <= hotBucketLimit members: ALL PAIRS (one chunk);
-    *  - larger runs: consecutive CHUNKS of hotBucketLimit members in
-    *    salted order, all-pairs within each chunk, plus one CHAIN edge
-    *    (last member of chunk i, first of chunk i+1) so the run is one
-    *    connected component deterministically. Chunk membership follows
-    *    the per-(source, bucket) salted order — an independent draw per
-    *    bucket (an exact-dup mass lands with IDENTICAL membership in
-    *    every band of every source; id-order chunks would split it the
-    *    same way everywhere) — so a true pair colliding in k buckets
-    *    co-chunks in at least one with p = 1-(1-1/s)^k, the same local-
-    *    evidence guarantee the earlier hash-salt sub-bucketing gave;
-    *  - past saltMaxBucket members (IDF cutoff: P(dup | shared
-    *    stop-phrase) ~ 0) the run flips to STAR mode: every further
-    *    member pairs with the run's first member only — O(n) output for
-    *    exact-dup masses and stop-phrase buckets, connectivity preserved
-    *    through the chunk chain (the hub is a chunk-1 member).
-    *
-    * vs the previous shape (partial-agg size table + shuffle-hash join
-    * back + salted repartition + separate hot-hub aggregation): the
-    * fan-out is shuffled ONCE and never joined or aggregated — the size
-    * table's high-cardinality partial aggregation alone measured 10x CPU
-    * inflation at 16 threads (per-task hash tables of mostly-singleton
-    * bucket keys falling out of shared L3), and pair generation needed
-    * the fan-out three times. Duplicate (sid, bucket) rows (a repeated
-    * winnow fingerprint) sort adjacent and are skipped. A monster bucket
-    * serializes one linear O(1)-memory scan in a single task — linear,
-    * never quadratic, and only in the IDF regime where the evidence is
-    * already worthless. */
-  def pairsFromBuckets(buckets: DataFrame, hotBucketLimit: Int, saltMaxBucket: Int = 1024): DataFrame = {
+    * Each (source, bucket) run arrives as one consecutive slice, ordered
+    * by a per-bucket salted hash of the member. With repeated sids skipped
+    * (a winnow fingerprint can repeat in one text), member i (0-based in
+    * that order) pairs with, for hot = hotBucketLimit and saltMax =
+    * saltMaxBucket:
+    *  - nothing, if i = 0;
+    *  - every earlier member of its chunk, members hot*(i/hot) .. i-1, if
+    *    1 <= i < saltMax and i % hot != 0 (runs of at most `hot` members
+    *    emit their whole clique);
+    *  - member i-1, if 1 <= i < saltMax and i % hot == 0: the chain edge
+    *    that starts a new chunk and keeps the run one component;
+    *  - member 0, the hub, if i >= saltMax: past this IDF cutoff (stop
+    *    phrases, exact-dup masses) a shared bucket is no evidence, so each
+    *    further member costs one star edge.
+    * Output is linear in the run past `hot`, and memory is one chunk.
+    * The salt draws chunk membership independently per bucket: an
+    * exact-dup mass lands with identical membership in every band of
+    * every source, and id-ordered chunks would split it the same way
+    * everywhere. A true pair colliding in k buckets therefore co-chunks in
+    * at least one with p = 1-(1-1/s)^k, s the number of chunks. */
+  def pairsFromBuckets(buckets: DataFrame, hotBucketLimit: Int, saltMaxBucket: Int): DataFrame = {
+    require(hotBucketLimit >= 2, s"hotBucketLimit must be >= 2, got $hotBucketLimit")
     val spark = buckets.sparkSession
     import spark.implicits._
-    val hotLimit = hotBucketLimit
+    val hot = hotBucketLimit
     val saltMax = saltMaxBucket
     // pair generation is OUTPUT-heavy (quadratic in chunk size) while its
     // shuffle INPUT is small, so AQE's bytes-based coalescing would
@@ -221,81 +211,29 @@ object Dedup {
       .select(col("source"), col("bucket"), col("sid"))
       .as[(Byte, Long, Long)]
     parted.mapPartitions { rows =>
-      val it = rows.buffered
-      def ord(x: Long, y: Long, s: Byte): (Long, Long, Byte) =
-        if (x < y) (x, y, s) else (y, x, s)
-      // outer iterator: one inner iterator per (source, bucket) run
-      new scala.collection.AbstractIterator[Iterator[(Long, Long, Byte)]] {
-        def hasNext: Boolean = it.hasNext
-        def next(): Iterator[(Long, Long, Byte)] = {
-          val (src, bkt, firstId) = it.next()
-          new scala.collection.AbstractIterator[(Long, Long, Byte)] {
-            private def sameRun: Boolean = it.hasNext && {
-              val h = it.head; h._1 == src && h._2 == bkt
+      // the current run: key, hub, last member seen, member index i, and
+      // its chunk's members chunk(0 until n)
+      var src: Byte = 0; var bkt = 0L; var hub = 0L; var last = 0L; var i = -1
+      var chunk = new Array[Long](16); var n = 0
+      rows.flatMap { case (s, b, sid) =>
+        val partners: Iterator[Long] =
+          if (i < 0 || s != src || b != bkt) {
+            src = s; bkt = b; hub = sid; i = 0; chunk(0) = sid; n = 1
+            Iterator.empty
+          } else if (sid == last) Iterator.empty
+          else {
+            i += 1
+            if (i >= saltMax) Iterator.single(hub)
+            else if (i % hot == 0) { chunk(0) = sid; n = 1; Iterator.single(last) }
+            else {
+              if (n == chunk.length) chunk = java.util.Arrays.copyOf(chunk, 2 * n)
+              chunk(n) = sid; n += 1
+              chunk.iterator.take(n - 1)
             }
-            private var chunk = scala.collection.mutable.ArrayBuffer[Long](firstId)
-            private var lastId = firstId       // duplicate-row skip
-            private val hub = firstId          // star target (chunk-1 member)
-            private var seen = 1L
-            private var hasPrevChunk = false
-            private var prevLast = 0L
-            private var queue: Iterator[(Long, Long, Byte)] = Iterator.empty
-            private var done = false
-            private def flushChunk(): Iterator[(Long, Long, Byte)] = {
-              val arr = chunk.toArray
-              // capacity hint only — hotLimit can be Int.MaxValue (the
-              // sharedSpanPairs exactness contract), and ArrayBuffer
-              // grows on demand anyway
-              chunk = new scala.collection.mutable.ArrayBuffer[Long](math.min(hotLimit, 64))
-              val chain =
-                if (hasPrevChunk && arr.nonEmpty) Iterator.single(ord(prevLast, arr.head, src))
-                else Iterator.empty
-              if (arr.nonEmpty) { hasPrevChunk = true; prevLast = arr.last }
-              val pairs =
-                if (arr.length < 2) Iterator.empty
-                else new scala.collection.AbstractIterator[(Long, Long, Byte)] {
-                  private var i = 0; private var j = 1
-                  def hasNext: Boolean = i < arr.length - 1
-                  def next(): (Long, Long, Byte) = {
-                    val out = ord(arr(i), arr(j), src)
-                    j += 1; if (j == arr.length) { i += 1; j = i + 1 }
-                    out
-                  }
-                }
-              chain ++ pairs
-            }
-            private def advance(): Unit = {
-              while (queue.isEmpty && !done) {
-                if (sameRun) {
-                  val id = it.next()._3
-                  if (id != lastId) {
-                    lastId = id
-                    seen += 1
-                    if (seen > saltMax) {
-                      // star regime; flush any partial chunk first so its
-                      // local pairs and chain survive the mode flip
-                      queue =
-                        (if (chunk.nonEmpty) flushChunk() else Iterator.empty) ++
-                          Iterator.single(ord(hub, id, src))
-                    } else {
-                      chunk += id
-                      if (chunk.length == hotLimit) queue = flushChunk()
-                    }
-                  }
-                } else {
-                  done = true
-                  // trailing chunk: pairs, plus the chain edge that links
-                  // it (even a single trailing member) to the previous one
-                  if (chunk.length >= 2 || (hasPrevChunk && chunk.nonEmpty))
-                    queue = flushChunk()
-                }
-              }
-            }
-            def hasNext: Boolean = { if (queue.isEmpty) advance(); queue.hasNext }
-            def next(): (Long, Long, Byte) = { if (queue.isEmpty) advance(); queue.next() }
           }
-        }
-      }.flatten
+        last = sid
+        partners.map(p => if (p < sid) (p, sid, s) else (sid, p, s))
+      }
     }.toDF("a", "b", "source")
   }
 

@@ -1,13 +1,9 @@
 package graft.sketch
 
-/** 64-bit SimHash (Charikar '02) over token hashes, plus the
-  * Hamming-bucket keys used for candidate generation.
-  *
-  * Engine-new (SURVEY §2.6: "SimHash Hamming-bucket join -> equi-join on
-  * banded simhash prefixes"). Splitting 64 bits into `chunks` equal blocks
-  * guarantees by pigeonhole that any pair within Hamming distance
-  * (chunks - 1) shares at least one exact block -> candidates come from a
-  * plain equi-join on (chunk_id, chunk_value), no pairwise scan.
+/** 64-bit SimHash (Charikar '02) over token hashes, plus the Hamming-bucket
+  * keys used for candidate generation (comboBucketKeys): near signatures
+  * share a key by pigeonhole, so candidates come from a plain equi-join on
+  * the key instead of a pairwise Hamming scan.
   */
 object SimHasher {
 
@@ -35,22 +31,6 @@ object SimHasher {
 
   def hammingDistance(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 
-  /** Bucket keys: (chunkId, chunkBits) pairs packed as a single long
-    * (chunkId in the top byte) so the join key is one BIGINT column. */
-  def bucketKeys(sim: Long, chunks: Int): Array[Long] = {
-    require(64 % chunks == 0, "chunks must divide 64")
-    val width = 64 / chunks
-    val mask = if (width == 64) -1L else (1L << width) - 1L
-    val out = new Array[Long](chunks)
-    var c = 0
-    while (c < chunks) {
-      val bits = (sim >>> (c * width)) & mask
-      out(c) = (c.toLong << 56) | bits
-      c += 1
-    }
-    out
-  }
-
   private final val ComboBlocks = 6
   private final val ComboWidths = Array(11, 11, 11, 11, 10, 10) // = 64 bits
 
@@ -59,10 +39,10 @@ object SimHasher {
     * the 64 bits into 6 blocks and key on every PAIR of blocks — C(6,2) =
     * 15 keys of 21-22 bits each. Pigeonhole: d flipped bits dirty at most
     * d blocks, so any pair within Hamming distance 4 leaves >= 2 blocks
-    * clean and shares >= 1 key. Versus 4x16-bit single chunks this has
-    * BOTH better recall (d<=4 vs d<=3) and ~13x lower junk-collision
-    * probability for unrelated docs (15*2^-21.3 vs 4*2^-16) — the junk
-    * candidate count is p*n^2/2, so p is what survives a 10^12-row run. */
+    * clean and shares >= 1 key. Against 4 single 16-bit blocks this
+    * catches d <= 4 instead of d <= 3 and collides unrelated docs ~13x
+    * less often (15*2^-21.3 vs 4*2^-16): junk candidates grow as
+    * p*n^2/2, so p is what survives a 10^12-row run. */
   def comboBucketKeys(sim: Long): Array[Long] = {
     val blocks = new Array[Long](ComboBlocks)
     var off = 0

@@ -20,20 +20,24 @@ object Text {
 
   /** Byte-level entry point (shared with the codegen Expression, which
     * hands us UTF8String bytes without materializing a String). */
-  def shingleHashesBytes(bytes: Array[Byte], k: Int): Array[Long] = {
-    if (bytes.length <= k) return Array(Murmur3x64.hash64(bytes, Murmur3x64.DefaultSeed))
-    val n = bytes.length - k + 1
-    val hashes = new Array[Long](n)
-    var i = 0
-    while (i < n) {
-      hashes(i) = Murmur3x64.hash128(bytes, i, k, Murmur3x64.DefaultSeed)._1
-      i += 1
-    }
+  def shingleHashesBytes(bytes: Array[Byte], k: Int): Array[Long] =
     // sorted output: downstream set-intersection (verify's hot loop) runs
     // as a zero-allocation merge walk (SortedIntersectCountExpr) instead
     // of a per-row hash set; sorting once per DOC amortizes over every
     // candidate PAIR the doc appears in
-    sortedDistinct(hashes)
+    sortedDistinct(kgramHashes(bytes, k))
+
+  /** The hash of every byte k-gram, in text order; a text of at most k
+    * bytes is one whole-text hash. */
+  private def kgramHashes(bytes: Array[Byte], k: Int): Array[Long] = {
+    if (bytes.length <= k) return Array(Murmur3x64.hash64(bytes, Murmur3x64.DefaultSeed))
+    val hashes = new Array[Long](bytes.length - k + 1)
+    var i = 0
+    while (i < hashes.length) {
+      hashes(i) = Murmur3x64.hash128(bytes, i, k, Murmur3x64.DefaultSeed)._1
+      i += 1
+    }
+    hashes
   }
 
   /** Sorts `hashes` in place and returns its distinct values, ascending —
@@ -88,16 +92,10 @@ object Text {
     * from an equi-join on fingerprints, verification by exact contains().
     */
   def winnowHashes(text: String, k: Int, window: Int): Array[Long] = {
-    val bytes = text.getBytes(StandardCharsets.UTF_8)
-    if (bytes.length <= k) return Array(Murmur3x64.hash64(bytes, Murmur3x64.DefaultSeed))
-    val n = bytes.length - k + 1
-    val grams = new Array[Long](n)
+    val grams = kgramHashes(text.getBytes(StandardCharsets.UTF_8), k)
+    val n = grams.length
     var i = 0
-    while (i < n) {
-      grams(i) = Murmur3x64.hash128(bytes, i, k, Murmur3x64.DefaultSeed)._1
-      i += 1
-    }
-    if (n <= window) {
+    if (n == 1 || n <= window) { // a short text's one whole-text hash, or one window
       var m = grams(0)
       i = 1
       while (i < n) { if (grams(i) <= m) m = grams(i); i += 1 }

@@ -63,6 +63,22 @@ class CliSpec extends AnyFunSuite {
     assert(merged == single)
   }
 
+  test("flags: unknown names, missing values and bare switches are rejected") {
+    val dedup = Cli.commandFlags("dedup")
+    assert(Cli.parseFlags(Seq("--input", "in", "--bands", "16"), dedup) ==
+      Map("input" -> "in", "bands" -> "16"))
+    // --band is not --bands: it must not run with the default band count
+    intercept[IllegalArgumentException](Cli.parseFlags(Seq("--input", "in", "--band", "16"), dedup))
+    intercept[IllegalArgumentException](Cli.parseFlags(Seq("--input", "in", "--bands"), dedup))
+    intercept[IllegalArgumentException](Cli.parseFlags(Seq("input", "in"), dedup))
+    // the reference CLI's bare --key switch must not silently run unkeyed
+    val sketch = Cli.commandFlags("sketch")
+    intercept[IllegalArgumentException](Cli.parseFlags(Seq("--input", "f", "--key"), sketch))
+    intercept[IllegalArgumentException](Cli.parseFlags(Seq("--key", "--raw", "--input", "f"), sketch))
+    assert(Cli.parseFlags(Seq("--input", "f", "--key", "true"), sketch) ==
+      Map("input" -> "f", "key" -> "true"))
+  }
+
   test("sketch --hh k: exact top-k under capacity, estimate-descending") {
     val lines = (Seq.fill(50)("hot") ++ Seq.fill(30)("warm") ++ Seq.fill(5)("cold")).toDF("value")
     val got = Cli.sketchRun(lines, keyed = false, raw = false, merge = false, hh = Some(2))

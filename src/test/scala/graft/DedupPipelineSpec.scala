@@ -144,7 +144,7 @@ class DedupPipelineSpec extends AnyFunSuite {
     val ids = (0 until 200).map(_.toLong)
     val buckets = ids.flatMap(id => (0 until 5).map(b => (id, b.toLong, 0.toByte)))
       .toDF("sid", "bucket", "source")
-    val pairs = Dedup.pairsFromBuckets(buckets, hotBucketLimit = 16)
+    val pairs = Dedup.pairsFromBuckets(buckets, hotBucketLimit = 16, saltMaxBucket = 1024)
       .select($"a", $"b").as[(Long, Long)].collect()
     assert(pairs.nonEmpty)
     val parent = scala.collection.mutable.Map.empty[Long, Long]

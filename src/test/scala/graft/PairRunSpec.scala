@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit contract of the single-pass pair stage (chunk + chain + star):
-  * output volume bounds, connectivity, and boundary run lengths. */
+  * the exact pair multiset of its per-member rule, output volume bounds,
+  * connectivity, and boundary run lengths. */
 class PairRunSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -67,6 +68,58 @@ class PairRunSpec extends AnyFunSuite {
     val ps = pairs(dup).distinct
     assert(ps.length == 45)
     assert(ps.forall { case (a, b) => a != b }, "self-pairs emitted for duplicate rows")
+  }
+
+  test("pairs equal the per-member rule: chunk clique, chain edge, star past saltMax") {
+    // The rule, stated on the driver: each (source, bucket) run ordered
+    // as the pass orders it (by xxhash64(source, bucket, sid), then sid),
+    // repeated sids skipped; member i pairs with nothing (i = 0), the
+    // hub (i >= saltMax), member i-1 (i % hot == 0) or the earlier
+    // members of its chunk. A pair is packed as source<<48 | a<<24 | b.
+    def pack(s: Long, x: Long, y: Long): Long = (s << 48) | (math.min(x, y) << 24) | math.max(x, y)
+    def rule(df: org.apache.spark.sql.DataFrame, hot: Int, saltMax: Int): Array[Long] = {
+      val rows = df.select($"source", $"bucket", $"sid", xxhash64($"source", $"bucket", $"sid"))
+        .as[(Byte, Long, Long, Long)].collect()
+      val out = Array.newBuilder[Long]
+      for (run <- rows.groupBy(r => (r._1, r._2)).values) {
+        val m = run.sortBy(r => (r._4, r._3)).map(_._3).distinct
+        for (i <- m.indices) {
+          val partners =
+            if (i == 0) 0 until 0
+            else if (i >= saltMax) 0 to 0
+            else if (i % hot == 0) (i - 1) to (i - 1)
+            else hot * (i / hot) until i
+          partners.foreach(p => out += pack(run.head._1, m(p), m(i)))
+        }
+      }
+      sortedArray(out.result())
+    }
+    def sortedArray(a: Array[Long]): Array[Long] = { java.util.Arrays.sort(a); a }
+    for ((hot, saltMax) <- Seq((16, 1024), (64, 1024), (7, 100), (Int.MaxValue, Int.MaxValue))) {
+      val lengths = Seq(0L, 1L, hot - 1L, hot.toLong, hot + 1L, 2L * hot,
+        saltMax - 1L, saltMax.toLong, saltMax + 1L, 3000L).filter(_ <= 3000).distinct
+      // two sources share bucket ids; every 5th member's row is repeated.
+      // More runs than the session's 8 shuffle partitions, so some
+      // partition holds several runs.
+      val fanout = for {
+        (source, ls) <- Seq(0 -> lengths, 3 -> lengths.filter(_ < 3000))
+        (n, bucket) <- ls.zipWithIndex
+        j <- 0L until n
+        copies = if (j % 5 == 0) 2 else 1
+        _ <- 0 until copies
+      } yield (((bucket * 104729L) + j * 7919L) & 0xFFFFFFL, bucket.toLong, source.toByte)
+      val df = fanout.toDF("sid", "bucket", "source")
+      val got = sortedArray(Dedup.pairsFromBuckets(df, hot, saltMax)
+        .select(shiftleft($"source".cast("long"), 48).bitwiseOR(shiftleft($"a", 24)).bitwiseOR($"b"))
+        .as[Long].collect())
+      val want = rule(df, hot, saltMax)
+      assert(got.length == want.length, s"hot=$hot saltMax=$saltMax: ${got.length} pairs, rule ${want.length}")
+      assert(java.util.Arrays.equals(got, want), s"hot=$hot saltMax=$saltMax: pair multisets differ")
+    }
+  }
+
+  test("hotBucketLimit below 2 is rejected") {
+    intercept[IllegalArgumentException](Dedup.pairsFromBuckets(bucketsOf(3), 1, 1024))
   }
 
   test("identical membership in many buckets is chunked differently per bucket") {

@@ -91,7 +91,6 @@ class SourcesSpec extends AnyFunSuite {
       "minhash_text" -> "SELECT size(minhash_text('hello world', 3, 16))",
       "band_hashes" -> "SELECT size(band_hashes(minhash_text('hello world', 3, 16), 4, 4))",
       "simhash_text" -> "SELECT simhash_text('hello world again')",
-      "simhash_buckets" -> "SELECT size(simhash_buckets(12345L, 4))",
       "hamming" -> "SELECT hamming(7L, 0L)",
       "exact_jaccard" -> "SELECT exact_jaccard('hello world', 'hello word', 3)",
       "exact_containment" -> "SELECT exact_containment('hello', 'hello world', 3)",
